@@ -1,7 +1,5 @@
 package graft.serve
 
-import java.net.InetSocketAddress
-
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
@@ -45,12 +43,14 @@ import graft.streaming.MouseStream
   * point (descending pages keep the newest rows, which is where the
   * reverse initial load reads its token — functions.js:322). */
 object QueryEdge {
+  import HttpServers.{errorBody, respond}
 
   private val Path = "/users/([^/]+)/movements/(-?[0-9]+)".r
 
   /** Default response-row bound — display-scale (the reference's
-    * chart polls every second and its heatmap asks for 10 rows), two
-    * orders of magnitude of headroom included. */
+    * chart polls every 2 s, `GRAPH_INTERVAL = 2000` at functions.js:11,
+    * and its heatmap asks for 10 rows), two orders of magnitude of
+    * headroom included. */
   val DefaultMaxRows = 1000
 
   /** Start serving `table` on `port` (0 = ephemeral; read the bound
@@ -59,12 +59,9 @@ object QueryEdge {
   def start(spark: SparkSession, table: String, port: Int = 0,
             maxRows: Int = DefaultMaxRows): HttpServer = {
     require(maxRows >= 1, "maxRows must be positive")
-    val server = HttpServer.create(new InetSocketAddress(port), 0)
-    server.createContext("/users",
-      (ex: HttpExchange) => handle(spark, table, maxRows, ex))
-    server.setExecutor(null) // serial — a display edge, not a fleet
-    server.start()
-    server
+    // one handler thread: serial — a display edge, not a fleet
+    HttpServers.start(port, "/users", threads = 1)(
+      handle(spark, table, maxRows, _))
   }
 
   private def handle(spark: SparkSession, table: String, maxRows: Int,
@@ -80,10 +77,7 @@ object QueryEdge {
         } else {
           val parsed =
             try {
-              val q = Option(ex.getRequestURI.getQuery).getOrElse("")
-              val params = q.split("&").iterator.filter(_.contains("="))
-                .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
-                .toMap
+              val params = HttpServers.params(ex)
               Right((params.get("reverse").contains("true"),
                 params.get("count").contains("false"),
                 params.get("limit").map(_.toInt), ts.toLong))
@@ -122,19 +116,4 @@ object QueryEdge {
         }
       case _ => respond(ex, 404, """{"error":"not found"}""")
     }
-
-  /** Exception → valid-JSON error body: strip quotes, backslashes AND
-    * control characters — Spark messages routinely carry newlines,
-    * which would break the reference client's JSON parse. */
-  private def errorBody(e: Exception): String =
-    s"""{"error":"${String.valueOf(e.getMessage)
-      .replaceAll("[\"\\\\\\x00-\\x1f]", " ").trim}"}"""
-
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes("UTF-8")
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(code, bytes.length)
-    val os = ex.getResponseBody
-    try os.write(bytes) finally os.close()
-  }
 }

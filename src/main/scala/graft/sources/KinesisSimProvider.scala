@@ -143,14 +143,16 @@ object KinesisSimProvider {
     }
 }
 
-/** The consumer's transport seam: record counts and line ranges per
-  * shard, over the file store directly or over [[ShardService]]'s
-  * wire protocol. Serializable so partitions ship it to executors —
-  * the HTTP form carries only the endpoint string, exactly like a
-  * real connector's client config. */
+/** The consumer's transport seam: every shard's record count in one
+  * call (one round trip over HTTP — a micro-batch's whole offset
+  * fetch) and line ranges per shard, over the file store directly or
+  * over [[ShardService]]'s wire protocol. Serializable so partitions
+  * ship it to executors — the HTTP form carries only the endpoint
+  * string, exactly like a real connector's client config. */
 private[sources] sealed trait SimTransport extends Serializable {
   def id: String
-  def recordCount(shard: Int): Long
+  /** Record count (== next sequence) of each shard in 0 until nShards. */
+  def recordCounts(nShards: Int): Map[Int, Long]
   def lines(shard: Int, from: Long, until: Long): Iterator[String]
 }
 
@@ -158,7 +160,7 @@ private[sources] case class FileTransport(dir: String) extends SimTransport {
   override def id: String = dir
   // Per-file record counts keyed by (path, size, mtime): batch files
   // are append-created (never rewritten in place), so a file whose
-  // size+mtime are unchanged has an unchanged count. recordCount runs
+  // size+mtime are unchanged has an unchanged count. recordCounts runs
   // every micro-batch; without this cache it would re-read every byte
   // ever written to the stream, per batch, forever.
   @transient private lazy val countCache =
@@ -171,8 +173,10 @@ private[sources] case class FileTransport(dir: String) extends SimTransport {
     countCache.getOrElseUpdate(key, KinesisSimProvider.countRecords(f))
   }
 
-  override def recordCount(shard: Int): Long =
-    KinesisSimProvider.shardFiles(dir, shard).map(cachedCount).sum
+  override def recordCounts(nShards: Int): Map[Int, Long] =
+    (0 until nShards).map { s =>
+      s -> KinesisSimProvider.shardFiles(dir, s).map(cachedCount).sum
+    }.toMap
 
   override def lines(shard: Int, from: Long, until: Long): Iterator[String] = {
     // SEEK, don't skip (the fix ShardService's /records got in round
@@ -205,8 +209,12 @@ private[sources] case class FileTransport(dir: String) extends SimTransport {
 
 private[sources] case class HttpTransport(endpoint: String) extends SimTransport {
   override def id: String = endpoint
-  override def recordCount(shard: Int): Long =
-    ShardService.Client.latest(endpoint, shard)
+  override def recordCounts(nShards: Int): Map[Int, Long] = {
+    val all = ShardService.Client.latestAll(endpoint)
+    require(all.size >= nShards,
+      s"$endpoint serves ${all.size} shards, the source asked for $nShards")
+    all.filter(_._1 < nShards)
+  }
   override def lines(shard: Int, from: Long, until: Long): Iterator[String] =
     ShardService.Client.records(endpoint, shard, from, until)
 }
@@ -236,10 +244,8 @@ private[sources] class KinesisSimTable(transport: SimTransport, nShards: Int,
         override def toBatch: org.apache.spark.sql.connector.read.Batch =
           new org.apache.spark.sql.connector.read.Batch {
             override def planInputPartitions(): Array[InputPartition] =
-              (0 until nShards).flatMap { s =>
-                val n = transport.recordCount(s)
-                if (n > 0) Some(KinesisSimPartition(transport, s, 0L, n))
-                else None
+              transport.recordCounts(nShards).toSeq.sorted.collect {
+                case (s, n) if n > 0 => KinesisSimPartition(transport, s, 0L, n)
               }.toArray
             override def createReaderFactory(): PartitionReaderFactory =
               new PartitionReaderFactory {
@@ -309,8 +315,18 @@ private[sources] class KinesisSimMicroBatchStream(
     startingOffsets: String = "earliest")
     extends MicroBatchStream with SupportsAdmissionControl {
 
-  private def shardRecordCount(shard: Int): Long =
-    transport.recordCount(shard)
+  // The uncapped latest offsets of the last fetch. Spark calls
+  // reportLatestOffset right after latestOffset(start, limit) in the
+  // same trigger; returning these saves a second round trip (the
+  // pattern Spark's Kafka source uses). Under maxRecordsPerTrigger
+  // this is the true latest, not the capped end.
+  private var lastFetched: Option[ShardOffsets] = None
+
+  private def fetchLatest(): ShardOffsets = {
+    val latest = ShardOffsets(transport.recordCounts(nShards))
+    lastFetched = Some(latest)
+    latest
+  }
 
   /** Where a FRESH query (no checkpoint) starts — the production
     * connector contract: `earliest` replays the retained stream,
@@ -323,8 +339,7 @@ private[sources] class KinesisSimMicroBatchStream(
     * restarts of the same query lineage. */
   override def initialOffset(): Offset = startingOffsets match {
     case "earliest" => ShardOffsets((0 until nShards).map(_ -> 0L).toMap)
-    case "latest" =>
-      ShardOffsets((0 until nShards).map(s => s -> shardRecordCount(s)).toMap)
+    case "latest" => fetchLatest()
     case json =>
       val o = ShardOffsets.parse(json)
       require(o.next.keys.forall(_ < nShards),
@@ -332,8 +347,7 @@ private[sources] class KinesisSimMicroBatchStream(
       ShardOffsets((0 until nShards).map(s => s -> o.next.getOrElse(s, 0L)).toMap)
   }
 
-  override def latestOffset(): Offset =
-    ShardOffsets((0 until nShards).map(s => s -> shardRecordCount(s)).toMap)
+  override def latestOffset(): Offset = fetchLatest()
 
   // ---- admission control (maxRecordsPerTrigger) ----
   // The backpressure surface every production connector exposes
@@ -350,7 +364,7 @@ private[sources] class KinesisSimMicroBatchStream(
     maxRecordsPerTrigger.map(ReadLimit.maxRows).getOrElse(ReadLimit.allAvailable())
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val trueLatest = (0 until nShards).map(s => s -> shardRecordCount(s)).toMap
+    val trueLatest = fetchLatest().next
     val cap = limit match {
       case r: ReadMaxRows => Some(r.maxRows())
       case _              => None
@@ -387,7 +401,8 @@ private[sources] class KinesisSimMicroBatchStream(
     }
   }
 
-  override def reportLatestOffset(): Offset = latestOffset()
+  override def reportLatestOffset(): Offset =
+    lastFetched.getOrElse(fetchLatest())
 
   override def deserializeOffset(json: String): Offset = {
     val o = ShardOffsets.parse(json)

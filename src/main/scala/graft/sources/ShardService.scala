@@ -1,19 +1,24 @@
 package graft.sources
 
-import java.net.InetSocketAddress
-
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+
+import graft.serve.HttpServers
 
 /** A NETWORK shard service over the simulated transport's store — the
   * wire half a managed stream exposes (Kinesis `DescribeStream` /
   * `GetRecords` with sequence cursors), served on a real socket so
   * the V2 connector's network consumption path is exercised
   * end-to-end instead of stopping at the filesystem. Zero added
-  * dependencies (JDK httpserver, the [[graft.serve.QueryEdge]]
-  * pattern).
+  * dependencies (JDK httpserver, started through
+  * [[graft.serve.HttpServers]] like [[graft.serve.QueryEdge]], so
+  * every accepted socket has TCP_NODELAY: without it each response
+  * waits ~40 ms for the client's delayed ACK).
   *
   * Endpoints (all GET):
   *  - `/describe`                     → `{"shards":N}`
+  *  - `/latest`                       → `{"0":n0,"1":n1,…}`, every
+  *    shard's next sequence in the source's offset JSON: a consumer
+  *    learns all shards' ends in ONE round trip per micro-batch
   *  - `/latest/{shard}`               → `{"next":N}` (next sequence)
   *  - `/records/{shard}?from=A&until=B` → newline-delimited record
   *    JSON in the transport's exact line format — the same bytes a
@@ -27,6 +32,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * real consumer runs.
   */
 object ShardService {
+  import HttpServers.{errorBody, respond}
 
   private val LatestPath = "/latest/([0-9]+)".r
   private val RecordsPath = "/records/([0-9]+)".r
@@ -58,17 +64,13 @@ object ShardService {
     * the contract it simulates while staying honest about where
     * durability lives. */
   def start(dir: String, nShards: Int, port: Int = 0): HttpServer = {
-    val server = HttpServer.create(new InetSocketAddress(port), 0)
     val producer = new SimulatedKinesis.ShardedProducer(dir, nShards)
     val seenKeys = scala.collection.mutable.HashSet.empty[String]
-    server.createContext("/",
-      (ex: HttpExchange) => handle(dir, nShards, producer, seenKeys, ex))
     // Spark tasks fetch shard ranges concurrently — serve them in
     // parallel (the producer path stays safe: appends synchronize on
     // the single server-side producer)
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
-    server.start()
-    server
+    HttpServers.start(port, "/", threads = 8)(
+      handle(dir, nShards, producer, seenKeys, _))
   }
 
   // partitionKey admits JSON escape sequences (the client escapes
@@ -123,6 +125,9 @@ object ShardService {
             case Some(calls) =>
               respond(ex, 200, s"""{"duplicate":false,"calls":$calls}""")
           }
+        case ("GET", "/latest") =>
+          respond(ex, 200,
+            ShardOffsets((0 until nShards).map(s => s -> count(dir, s)).toMap).json)
         case ("GET", LatestPath(shard)) =>
           val s = shard.toInt
           if (s >= nShards) respond(ex, 404, """{"error":"no such shard"}""")
@@ -131,10 +136,7 @@ object ShardService {
           val s = shard.toInt
           if (s >= nShards) respond(ex, 404, """{"error":"no such shard"}""")
           else {
-            val q = Option(ex.getRequestURI.getQuery).getOrElse("")
-            val params = q.split("&").iterator.filter(_.contains("="))
-              .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
-              .toMap
+            val params = HttpServers.params(ex)
             val from = params.get("from").map(_.toLong).getOrElse(0L)
             val until = params.get("until").map(_.toLong).getOrElse(Long.MaxValue)
             // per-call record cap, like GetRecords' 10k limit: the
@@ -170,12 +172,8 @@ object ShardService {
           respond(ex, 405, """{"error":"method not allowed"}""")
       }
     } catch {
-      case e: IllegalArgumentException =>
-        respond(ex, 400, s"""{"error":"${String.valueOf(e.getMessage)
-          .replaceAll("[\"\\\\\\x00-\\x1f]", " ").trim}"}""")
-      case e: Exception =>
-        respond(ex, 500, s"""{"error":"${String.valueOf(e.getMessage)
-          .replaceAll("[\"\\\\\\x00-\\x1f]", " ").trim}"}""")
+      case e: IllegalArgumentException => respond(ex, 400, errorBody(e))
+      case e: Exception => respond(ex, 500, errorBody(e))
     }
 
   // counts reuse the provider's file enumeration + record counter —
@@ -206,15 +204,6 @@ object ShardService {
     new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
       .split("\n").iterator.filter(_.nonEmpty)
 
-  private def respond(ex: HttpExchange, code: Int, body: String,
-                      contentType: String = "application/json"): Unit = {
-    val bytes = body.getBytes("UTF-8")
-    ex.getResponseHeaders.set("Content-Type", contentType)
-    ex.sendResponseHeaders(code, if (bytes.isEmpty) -1 else bytes.length)
-    val os = ex.getResponseBody
-    try os.write(bytes) finally os.close()
-  }
-
   /** Driver/executor-side client half (plain HttpURLConnection — no
     * dependencies, serializable by construction since only the
     * endpoint string ships). */
@@ -238,6 +227,10 @@ object ShardService {
         .getOrElse(throw new IllegalStateException(s"bad /latest body: $body"))
         .group(1).toLong
     }
+
+    /** Every shard's next sequence in one round trip (`GET /latest`). */
+    def latestAll(endpoint: String): Map[Int, Long] =
+      ShardOffsets.parse(get(s"$endpoint/latest")).next
 
     /** Range read with transparent pagination over the server's
       * per-call cap: a short page means the shard is exhausted. */

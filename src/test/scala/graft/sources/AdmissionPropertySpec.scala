@@ -25,8 +25,7 @@ class AdmissionPropertySpec extends SparkSpec {
     prod.putRecords((1 to 60).map(i => (s"r$i", s"u${i % 7}")))
     val stream = new KinesisSimMicroBatchStream(
       FileTransport(dir), 3)
-    val avail = (0 until 3)
-      .map(s => s -> FileTransport(dir).recordCount(s)).toMap
+    val avail = FileTransport(dir).recordCounts(3)
     val total = avail.values.sum
     assert(total == 60L)
     check("water-fill", Prop.forAllNoShrink(Gen.chooseNum(1L, 80L)) { cap =>

@@ -90,7 +90,7 @@ class KinesisSinkCrashSpec extends AnyFunSuite {
       prod.putRecords((0 until 3).map(i => (s"r${b * 3 + i}", "k")))
     }
     val t = FileTransport(dir)
-    assert(t.recordCount(0) == 15L)
+    assert(t.recordCounts(1) == Map(0 -> 15L))
     def data(from: Long, until: Long): Seq[String] =
       t.lines(0, from, until)
         .map(l => new String(KinesisSimProvider.parse(l)._3, "UTF-8")).toSeq

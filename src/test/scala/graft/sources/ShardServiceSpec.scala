@@ -21,8 +21,12 @@ class ShardServiceSpec extends SparkSpec {
     val ep = s"http://127.0.0.1:${server.getAddress.getPort}"
     try {
       assert(ShardService.Client.get(s"$ep/describe") == """{"shards":2}""")
-      val total = (0 until 2).map(ShardService.Client.latest(ep, _)).sum
+      val perShard =
+        (0 until 2).map(s => s -> ShardService.Client.latest(ep, s)).toMap
+      val total = perShard.values.sum
       assert(total == 3L, s"3 records across shards, got $total")
+      // the all-shards form agrees with the per-shard one, shard by shard
+      assert(ShardService.Client.latestAll(ep) == perShard)
       // a half-open range replays exactly the requested slice, in the
       // transport's own line format (the file consumer's bytes)
       val shardOfU1 = (0 until 2)
@@ -69,6 +73,68 @@ class ShardServiceSpec extends SparkSpec {
       assert(perKey == Map("u1" -> Seq("a1", "a2", "a3"),
         "u2" -> Seq("b1", "b2")), s"got $perKey")
     } finally { q.stop(); server.stop(0) }
+  }
+
+  test("one /latest round trip per trigger; progress shows the uncapped latest") {
+    val dir = Files.createTempDirectory("graft_shard_http_latest").toString
+    val prod = new SimulatedKinesis.ShardedProducer(dir, nShards = 2)
+    prod.putRecords((1 to 10).map(i => (s"r$i", s"u${i % 3}")))
+    val server = ShardService.start(dir, nShards = 2)
+    val real = s"http://127.0.0.1:${server.getAddress.getPort}"
+    // a stub shard endpoint: forwards every GET to the real service and
+    // counts the offset requests on the way
+    val allShards = new java.util.concurrent.atomic.AtomicInteger()
+    val oneShard = new java.util.concurrent.atomic.AtomicInteger()
+    val stub = graft.serve.HttpServers.start(0, "/", threads = 4) { ex =>
+      val path = ex.getRequestURI.getPath
+      if (path == "/latest") allShards.incrementAndGet()
+      if (path.startsWith("/latest/")) oneShard.incrementAndGet()
+      val query = Option(ex.getRequestURI.getRawQuery).fold("")("?" + _)
+      graft.serve.HttpServers.respond(ex, 200,
+        ShardService.Client.get(s"$real$path$query"))
+    }
+    val ep = s"http://127.0.0.1:${stub.getAddress.getPort}"
+    def total(json: String): Long = ShardOffsets.parse(json).next.values.sum
+    try {
+      // the engine: one trigger (the next is an hour away) under a cap
+      // of 4 of the 10 records
+      val q = spark.readStream.format("kinesis-sim")
+        .option("endpoint", ep).option("shards", "2")
+        .option("maxRecordsPerTrigger", "4").load()
+        .writeStream.format("memory").queryName("ksim_http_latest")
+        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 hour"))
+        .start()
+      val p = try {
+        val deadline = System.nanoTime() + 120L * 1000000000L
+        while (q.lastProgress == null && System.nanoTime() < deadline)
+          Thread.sleep(50)
+        q.lastProgress
+      } finally q.stop()
+      assert(p != null, "the first trigger never reported progress")
+      assert((allShards.get, oneShard.get) == ((1, 0)),
+        s"one all-shards /latest per trigger, got ${allShards.get} " +
+          s"all-shards and ${oneShard.get} per-shard requests")
+      // reportLatestOffset returns the TRUE latest the trigger fetched,
+      // not the capped end it admitted
+      assert(total(p.sources(0).latestOffset) == 10L, p.sources(0).latestOffset)
+      assert(total(p.sources(0).endOffset) == 4L, p.sources(0).endOffset)
+
+      // the stream driven the way the engine drives it, trigger by
+      // trigger: latestOffset(start, limit), then reportLatestOffset
+      allShards.set(0)
+      val stream = new KinesisSimMicroBatchStream(HttpTransport(ep), 2, Some(4L))
+      assert(total(stream.reportLatestOffset().json) == 10L)
+      assert(allShards.get == 1, "nothing cached yet: one fetch")
+      var start = stream.initialOffset()
+      (1 to 3).foreach { trigger =>
+        val end = stream.latestOffset(start, stream.getDefaultReadLimit)
+        assert(total(stream.reportLatestOffset().json) == 10L)
+        assert(total(end.json) == math.min(10L, 4L * trigger))
+        assert(allShards.get == 1 + trigger, s"trigger $trigger")
+        start = end
+      }
+      assert(oneShard.get == 0)
+    } finally { stub.stop(0); server.stop(0) }
   }
 
   test("admission control composes with the HTTP transport") {
