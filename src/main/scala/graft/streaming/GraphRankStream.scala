@@ -14,7 +14,7 @@ import graft.sources.Snapshots
   * fold family's streaming seam (VERDICT r14 item 4, completed per
   * r15 item 2: not just plain PageRank — the PPR trajectory and the
   * components labeling fold off the SAME edge state in the same
-  * micro-batch, through [[graft.operators.GraphOps.graphStatesFold]],
+  * micro-batch, through [[graft.operators.GraphOps.graphStatesFoldPack]],
   * which pays the delta prep, the locality probe, and the survivor
   * state scan once for all three families). A `foreachBatch`
   * consumer folds each micro-batch's signed edge delta and persists

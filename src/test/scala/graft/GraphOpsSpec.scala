@@ -417,11 +417,16 @@ class GraphOpsSpec extends SparkSpec {
     df.select("node", "pr").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
 
+  /** The served tip of a (node, iter, pr) trajectory. */
+  private def tipOf(traj: org.apache.spark.sql.DataFrame, iterations: Int) =
+    traj.filter(col("iter") === iterations)
+
   test("pageRankTrajectory: iterate `iterations` equals pageRank's " +
        "output row for row; iterate 0 is uniform") {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L),
       (10L, 11L)).toDF("id1", "id2")
-    val traj = GraphOps.pageRankTrajectory(pairs, iterations = 4)
+    val traj = GraphOps.pageRankTrajectoryFromEdges(
+      GraphOps.pageRankEdgeState(pairs), iterations = 4)
     val last = prRows(traj.filter(col("iter") === 4))
     val direct = prRows(GraphOps.pageRank(pairs, iterations = 4))
     assert(last == direct, "trajectory tip == pageRank")
@@ -440,9 +445,10 @@ class GraphOpsSpec extends SparkSpec {
       Seq((4L, 10L)),             // merges the two components
       Seq((2L, 4L)),              // rewires inside one component
       Seq((1L, 2L), (3L, 10L)))   // duplicate of a prior edge + merge
+    val st = GraphOps.pageRankEdgeState(prior)
+    val traj = GraphOps.pageRankTrajectoryFromEdges(st, iterations = 5)
     for ((d, i) <- deltas.zipWithIndex) {
-      val traj = GraphOps.pageRankTrajectory(prior, iterations = 5)
-      val inc = prRows(GraphOps.pageRankDelta(traj, prior,
+      val inc = prRows(GraphOps.pageRankDeltaFromState(traj, st,
         d.toDF("id1", "id2"), iterations = 5))
       val scratch = prRows(GraphOps.pageRank(
         prior.unionByName(d.toDF("id1", "id2")), iterations = 5))
@@ -451,7 +457,30 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("pageRankDelta == from-scratch on random graphs and splits") {
-    for (seed <- Seq(3, 23)) {
+    for ((name, prior, delta, _, majority) <- randomSplits(Seq(3, 23))) {
+      val st = GraphOps.pageRankEdgeState(prior.toDF("id1", "id2"))
+      val traj = GraphOps.pageRankTrajectoryFromEdges(st, iterations = 5)
+      GraphOps.lastBranch = None
+      val inc = prRows(GraphOps.pageRankDeltaFromState(traj, st,
+        delta.toDF("id1", "id2"), iterations = 5))
+      assert(GraphOps.lastBranch.contains(("pageRankDelta", majority)),
+        s"$name: saw ${GraphOps.lastBranch}")
+      val scratch = prRows(GraphOps.pageRank(
+        (prior ++ delta).toDF("id1", "id2"), iterations = 5))
+      assert(inc == scratch, s"$name (|delta| = ${delta.size})")
+      assert(inc == refRanks(universeOf(prior), prior ++ delta, None, 5),
+        s"$name: driver reference")
+    }
+  }
+
+  /** Node-preserving (prior, delta) splits: one dense random graph per
+    * seed, whose delta balls cover a majority of the nodes, plus one
+    * [[blockGraph]] whose delta stays inside one block and so takes
+    * the restricted fold. Yields (name, prior, delta, the kept part's
+    * nodes, majority). */
+  private def randomSplits(seeds: Seq[Int]): Seq[(String,
+      Seq[(Long, Long)], Seq[(Long, Long)], Set[Long], Boolean)] =
+    seeds.map { seed =>
       val rnd = new scala.util.Random(seed)
       val edges = (1 to 150).map(_ =>
         (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
@@ -461,28 +490,43 @@ class GraphOpsSpec extends SparkSpec {
       val (cand, rest) = edges.partition(_ => rnd.nextInt(10) == 0)
       val nodes = rest.flatMap(e => Seq(e._1, e._2)).toSet
       val delta = cand.filter(e => nodes(e._1) && nodes(e._2))
-      val prior = rest ++ cand.filterNot(delta.contains)
-      val traj = GraphOps.pageRankTrajectory(
-        prior.toDF("id1", "id2"), iterations = 5)
-      val inc = prRows(GraphOps.pageRankDelta(traj,
-        prior.toDF("id1", "id2"), delta.toDF("id1", "id2"),
-        iterations = 5))
-      val scratch = prRows(GraphOps.pageRank(
-        (prior ++ delta).toDF("id1", "id2"), iterations = 5))
-      assert(inc == scratch, s"seed $seed (|delta| = ${delta.size})")
+      (s"seed $seed", rest ++ cand.filterNot(delta.contains), delta, nodes,
+        true)
+    } :+ {
+      val (edges, absent) = blockGraph(seeds.head)
+      (s"blocks ${seeds.head}", edges, absent.take(2),
+        universeOf(edges).toSet, false)
     }
+
+  /** A random graph of eight disjoint 6-node blocks, each a path plus
+    * random chords, and the pairs of block 0 it lacks: a delta inside
+    * one block keeps the locality ball within those six nodes — a
+    * small minority — so the folds take the restricted branch. */
+  private def blockGraph(seed: Int)
+      : (Seq[(Long, Long)], Seq[(Long, Long)]) = {
+    val rnd = new scala.util.Random(seed)
+    val edges = (0L until 8L).flatMap { b =>
+      val ids = (0L until 6L).map(_ + 10L * b)
+      ids.zip(ids.tail) ++
+        (1 to 3).map(_ => (ids(rnd.nextInt(6)), ids(rnd.nextInt(6))))
+    }.filter(e => e._1 != e._2)
+      .map(e => (e._1 min e._2, e._1 max e._2)).distinct
+    val absent = for (a <- 0L until 6L; b <- a + 1L until 6L
+                      if !edges.contains((a, b))) yield (a, b)
+    (edges, absent)
   }
 
   test("pageRankDelta: an empty delta returns the prior tip; a " +
        "node-adding delta refuses loudly") {
     val prior = Seq((1L, 2L), (2L, 3L)).toDF("id1", "id2")
-    val traj = GraphOps.pageRankTrajectory(prior, iterations = 3)
+    val st = GraphOps.pageRankEdgeState(prior)
+    val traj = GraphOps.pageRankTrajectoryFromEdges(st, iterations = 3)
     val empty = Seq.empty[(Long, Long)].toDF("id1", "id2")
-    assert(prRows(GraphOps.pageRankDelta(traj, prior, empty,
+    assert(prRows(GraphOps.pageRankDeltaFromState(traj, st, empty,
         iterations = 3)) ==
       prRows(GraphOps.pageRank(prior, iterations = 3)))
     val e = intercept[IllegalArgumentException] {
-      GraphOps.pageRankDelta(traj, prior,
+      GraphOps.pageRankDeltaFromState(traj, st,
         Seq((3L, 99L)).toDF("id1", "id2"), iterations = 3)
     }
     assert(e.getMessage.contains("new node"))
@@ -549,8 +593,9 @@ class GraphOpsSpec extends SparkSpec {
     // exercises the restricted-fold branch, not the recompute branch
     val prior = (1L until 60L).map(i => (i, i + 1)).toDF("id1", "id2")
     val delta = Seq((2L, 4L)).toDF("id1", "id2")
-    val traj = GraphOps.pageRankTrajectory(prior, iterations = 4)
-    val inc = prRows(GraphOps.pageRankDelta(traj, prior, delta,
+    val st = GraphOps.pageRankEdgeState(prior)
+    val traj = GraphOps.pageRankTrajectoryFromEdges(st, iterations = 4)
+    val inc = prRows(GraphOps.pageRankDeltaFromState(traj, st, delta,
       iterations = 4))
     val scratch = prRows(GraphOps.pageRank(prior.unionByName(delta),
       iterations = 4))
@@ -562,8 +607,9 @@ class GraphOpsSpec extends SparkSpec {
     val prior = (1L until 60L).map(i => (i, i + 1)).toDF("id1", "id2")
     val delta = Seq((2L, 4L)).toDF("id1", "id2")
     val seeds = (1L to 60L).filter(_ % 6 == 0).toDF("node")
-    val traj = GraphOps.pprTrajectory(prior, seeds, iterations = 4)
-    val inc = prRows(GraphOps.pprDelta(traj, prior, delta, seeds,
+    val st = GraphOps.pageRankEdgeState(prior)
+    val traj = GraphOps.pprTrajectoryFromEdges(st, seeds, iterations = 4)
+    val inc = prRows(GraphOps.pprDeltaFromState(traj, st, delta, seeds,
       iterations = 4))
     val scratch = prRows(GraphOps.personalizedPageRank(
       prior.unionByName(delta), seeds, iterations = 4))
@@ -605,7 +651,8 @@ class GraphOpsSpec extends SparkSpec {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L),
       (10L, 11L)).toDF("id1", "id2")
     val seeds = Seq(1L, 10L).toDF("node")
-    val traj = GraphOps.pprTrajectory(pairs, seeds, iterations = 4)
+    val traj = GraphOps.pprTrajectoryFromEdges(
+      GraphOps.pageRankEdgeState(pairs), seeds, iterations = 4)
     val last = prRows(traj.filter(col("iter") === 4))
     val direct = prRows(
       GraphOps.personalizedPageRank(pairs, seeds, iterations = 4))
@@ -628,9 +675,10 @@ class GraphOpsSpec extends SparkSpec {
       Seq((4L, 10L)),             // merges the two components
       Seq((2L, 4L)),              // rewires inside one component
       Seq((1L, 2L), (3L, 10L)))   // duplicate of a prior edge + merge
+    val st = GraphOps.pageRankEdgeState(prior)
+    val traj = GraphOps.pprTrajectoryFromEdges(st, seeds, iterations = 5)
     for ((d, i) <- deltas.zipWithIndex) {
-      val traj = GraphOps.pprTrajectory(prior, seeds, iterations = 5)
-      val inc = prRows(GraphOps.pprDelta(traj, prior,
+      val inc = prRows(GraphOps.pprDeltaFromState(traj, st,
         d.toDF("id1", "id2"), seeds, iterations = 5))
       val scratch = prRows(GraphOps.personalizedPageRank(
         prior.unionByName(d.toDF("id1", "id2")), seeds, iterations = 5))
@@ -639,24 +687,21 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("pprDelta == from-scratch on random graphs and splits") {
-    for (seed <- Seq(5, 31)) {
-      val rnd = new scala.util.Random(seed)
-      val edges = (1 to 150).map(_ =>
-        (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
-        .filter(e => e._1 != e._2).distinct
-      val (cand, rest) = edges.partition(_ => rnd.nextInt(10) == 0)
-      val nodes = rest.flatMap(e => Seq(e._1, e._2)).toSet
-      val delta = cand.filter(e => nodes(e._1) && nodes(e._2))
-      val prior = rest ++ cand.filterNot(delta.contains)
-      val seeds = nodes.filter(_ % 5 == 0).toSeq.toDF("node")
-      val traj = GraphOps.pprTrajectory(
-        prior.toDF("id1", "id2"), seeds, iterations = 5)
-      val inc = prRows(GraphOps.pprDelta(traj,
-        prior.toDF("id1", "id2"), delta.toDF("id1", "id2"), seeds,
-        iterations = 5))
+    for ((name, prior, delta, kept, majority) <- randomSplits(Seq(5, 31))) {
+      val seedSet = kept.filter(_ % 5 == 0)
+      val seeds = seedSet.toSeq.toDF("node")
+      val st = GraphOps.pageRankEdgeState(prior.toDF("id1", "id2"))
+      val traj = GraphOps.pprTrajectoryFromEdges(st, seeds, iterations = 5)
+      GraphOps.lastBranch = None
+      val inc = prRows(GraphOps.pprDeltaFromState(traj, st,
+        delta.toDF("id1", "id2"), seeds, iterations = 5))
+      assert(GraphOps.lastBranch.contains(("pprDelta", majority)),
+        s"$name: saw ${GraphOps.lastBranch}")
       val scratch = prRows(GraphOps.personalizedPageRank(
         (prior ++ delta).toDF("id1", "id2"), seeds, iterations = 5))
-      assert(inc == scratch, s"seed $seed (|delta| = ${delta.size})")
+      assert(inc == scratch, s"$name (|delta| = ${delta.size})")
+      assert(inc == refRanks(universeOf(prior), prior ++ delta,
+        Some(seedSet), 5), s"$name: driver reference")
     }
   }
 
@@ -691,22 +736,24 @@ class GraphOpsSpec extends SparkSpec {
        "SEED-CHANGING deltas both refuse loudly") {
     val prior = Seq((1L, 2L), (2L, 3L)).toDF("id1", "id2")
     val seeds = Seq(1L).toDF("node")
-    val traj = GraphOps.pprTrajectory(prior, seeds, iterations = 3)
+    val st = GraphOps.pageRankEdgeState(prior)
+    val traj = GraphOps.pprTrajectoryFromEdges(st, seeds, iterations = 3)
     val empty = Seq.empty[(Long, Long)].toDF("id1", "id2")
-    assert(prRows(GraphOps.pprDelta(traj, prior, empty, seeds,
+    assert(prRows(GraphOps.pprDeltaFromState(traj, st, empty, seeds,
         iterations = 3)) ==
       prRows(GraphOps.personalizedPageRank(prior, seeds, iterations = 3)))
     val eNode = intercept[IllegalArgumentException] {
-      GraphOps.pprDelta(traj, prior, Seq((3L, 99L)).toDF("id1", "id2"),
-        seeds, iterations = 3)
+      GraphOps.pprDeltaFromState(traj, st,
+        Seq((3L, 99L)).toDF("id1", "id2"), seeds, iterations = 3)
     }
     assert(eNode.getMessage.contains("new node"))
     // the stateful-fold hazard the check exists for: same state,
     // DIFFERENT seed set — iterate 0 no longer matches the teleport
     // vector and the fold must refuse, not silently mix recurrences
     val eSeed = intercept[IllegalArgumentException] {
-      GraphOps.pprDelta(traj, prior, Seq((1L, 3L)).toDF("id1", "id2"),
-        Seq(2L).toDF("node"), iterations = 3)
+      GraphOps.pprDeltaFromState(traj, st,
+        Seq((1L, 3L)).toDF("id1", "id2"), Seq(2L).toDF("node"),
+        iterations = 3)
     }
     assert(eSeed.getMessage.contains("different seed set"))
   }
@@ -986,9 +1033,9 @@ class GraphOpsSpec extends SparkSpec {
     val traj = GraphOps.pageRankTrajectoryFromEdges(st, iterations = 4)
     val tip = prRows(traj.filter(col("iter") === 4))
     // same edge added AND deleted in one batch: survivor law keeps it
-    assert(prRows(GraphOps.pageRankDeltaSigned(traj, st,
+    assert(prRows(tipOf(GraphOps.graphStatesFoldPack(traj, None, None, st,
         Seq((2L, 3L)).toDF("id1", "id2"),
-        Seq((2L, 3L)).toDF("id1", "id2"), iterations = 4)) == tip,
+        Seq((2L, 3L)).toDF("id1", "id2"), iterations = 4).traj, 4)) == tip,
       "(prior − del) ∪ add = prior when add = del ⊆ prior")
     // deleting an edge that never existed changes nothing
     assert(prRows(GraphOps.pageRankDelete(traj, st,
@@ -1005,42 +1052,60 @@ class GraphOpsSpec extends SparkSpec {
     val tip0 = prRows(traj0.filter(col("iter") === 4))
     // fold 1: delete both of node 2's edges (strands 1, 2, 3)
     val del = Seq((1L, 2L), (2L, 3L)).toDF("id1", "id2")
-    val (traj1, st1) = GraphOps.pageRankStateFold(traj0, st0,
+    val r1 = GraphOps.graphStatesFoldPack(traj0, None, None, st0,
       del.limit(0), del, iterations = 4)
     // fold 2: re-add them — the final graph is the original, and the
     // universe never moved, so the tip must match bit for bit
-    val (traj2, _) = GraphOps.pageRankStateFold(traj1, st1,
+    val r2 = GraphOps.graphStatesFoldPack(r1.traj, None, None, r1.edgesDeg,
       del, del.limit(0), iterations = 4)
-    assert(prRows(traj2.filter(col("iter") === 4)) == tip0,
+    assert(prRows(tipOf(r2.traj, 4)) == tip0,
       "delete + re-add across maintained folds == original tip")
   }
 
   test("pageRankDeltaSigned == reference on random graphs with mixed " +
        "additions and deletions (stranding allowed)") {
-    for (seed <- Seq(11, 47)) {
+    for ((name, edges, adds, del, majority) <- signedBatches(Seq(11, 47))) {
+      val prior = edges.toDF("id1", "id2")
+      val nodes = universeOf(edges)
+      val st = GraphOps.pageRankEdgeState(prior)
+      val traj = GraphOps.pageRankTrajectoryFromEdges(st, iterations = 5)
+      GraphOps.lastBranch = None
+      val out = prRows(tipOf(GraphOps.graphStatesFoldPack(traj, None, None,
+        st, adds.toDF("id1", "id2"), del.toDF("id1", "id2"),
+        iterations = 5).traj, 5))
+      assert(GraphOps.lastBranch.contains(("graphStatesFold", majority)),
+        s"$name: saw ${GraphOps.lastBranch}")
+      val surv = edges.filterNot(e =>
+        del.contains(e) || del.contains(e.swap)) ++ adds
+      assert(out == refRanks(nodes, surv, None, 5),
+        s"$name (|add| = ${adds.size}, |del| = ${del.size})")
+    }
+  }
+
+  /** Mixed signed batches: one dense random graph per seed (additions
+    * drawn WITHIN the universe and absent from the prior, deletions a
+    * random fifth of its edges — majority balls), plus one
+    * [[blockGraph]] batch adding and deleting inside block 0 only
+    * (restricted fold). Yields (name, edges, adds, dels, majority). */
+  private def signedBatches(seeds: Seq[Int]): Seq[(String,
+      Seq[(Long, Long)], Seq[(Long, Long)], Seq[(Long, Long)], Boolean)] =
+    seeds.map { seed =>
       val rnd = new scala.util.Random(seed)
       val edges = (1 to 140).map(_ =>
         (rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
         .filter(e => e._1 != e._2).distinct
       val del = edges.filter(_ => rnd.nextInt(5) == 0)
-      val prior = edges.toDF("id1", "id2")
       val nodes = universeOf(edges)
-      // additions drawn WITHIN the universe, absent from the prior
       val adds = (1 to 10).map(_ =>
         (nodes(rnd.nextInt(nodes.size)), nodes(rnd.nextInt(nodes.size))))
         .filter(e => e._1 != e._2)
         .filterNot(e => edges.contains(e) || edges.contains(e.swap))
         .distinct
-      val st = GraphOps.pageRankEdgeState(prior)
-      val traj = GraphOps.pageRankTrajectoryFromEdges(st, iterations = 5)
-      val out = prRows(GraphOps.pageRankDeltaSigned(traj, st,
-        adds.toDF("id1", "id2"), del.toDF("id1", "id2"), iterations = 5))
-      val surv = edges.filterNot(e =>
-        del.contains(e) || del.contains(e.swap)) ++ adds
-      assert(out == refRanks(nodes, surv, None, 5),
-        s"seed $seed (|add| = ${adds.size}, |del| = ${del.size})")
+      (s"seed $seed", edges, adds, del, true)
+    } :+ {
+      val (edges, absent) = blockGraph(seeds.head)
+      (s"blocks ${seeds.head}", edges, absent.take(2), Seq((2L, 3L)), false)
     }
-  }
 
   test("pprDelete == reference; a stranded non-seed decays to zero, " +
        "a stranded seed keeps its teleport share") {
@@ -1062,30 +1127,26 @@ class GraphOpsSpec extends SparkSpec {
 
   test("pprDeltaSigned == reference on random graphs with mixed " +
        "additions and deletions") {
-    for (seed <- Seq(13, 59)) {
-      val rnd = new scala.util.Random(seed)
-      val edges = (1 to 140).map(_ =>
-        (rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
-        .filter(e => e._1 != e._2).distinct
-      val del = edges.filter(_ => rnd.nextInt(5) == 0)
+    for ((name, edges, adds, del, majority) <- signedBatches(Seq(13, 59))) {
       val nodes = universeOf(edges)
-      val adds = (1 to 10).map(_ =>
-        (nodes(rnd.nextInt(nodes.size)), nodes(rnd.nextInt(nodes.size))))
-        .filter(e => e._1 != e._2)
-        .filterNot(e => edges.contains(e) || edges.contains(e.swap))
-        .distinct
       val seedSet = nodes.filter(_ % 5 == 0).toSet
       val prior = edges.toDF("id1", "id2")
       val st = GraphOps.pageRankEdgeState(prior)
       val traj = GraphOps.pprTrajectoryFromEdges(st,
         seedSet.toSeq.toDF("node"), iterations = 5)
-      val out = prRows(GraphOps.pprDeltaSigned(traj, st,
-        adds.toDF("id1", "id2"), del.toDF("id1", "id2"),
-        seedSet.toSeq.toDF("node"), iterations = 5))
+      // mixed signed batches fold through the pack, which carries the
+      // PPR family next to the plain trajectory it shares a universe with
+      GraphOps.lastBranch = None
+      val out = prRows(tipOf(GraphOps.graphStatesFoldPack(
+        GraphOps.pageRankTrajectoryFromEdges(st, iterations = 5),
+        Some(traj), None, st, adds.toDF("id1", "id2"),
+        del.toDF("id1", "id2"), iterations = 5).pprTraj.get, 5))
+      assert(GraphOps.lastBranch.contains(("graphStatesFold", majority)),
+        s"$name: saw ${GraphOps.lastBranch}")
       val surv = edges.filterNot(e =>
         del.contains(e) || del.contains(e.swap)) ++ adds
       assert(out == refRanks(nodes, surv, Some(seedSet), 5),
-        s"seed $seed (|add| = ${adds.size}, |del| = ${del.size})")
+        s"$name (|add| = ${adds.size}, |del| = ${del.size})")
     }
   }
 
@@ -1095,9 +1156,10 @@ class GraphOpsSpec extends SparkSpec {
     val st0 = GraphOps.pageRankEdgeState(edges0.toDF("id1", "id2"))
     val traj0 = GraphOps.pageRankTrajectoryFromEdges(st0, iterations = 4)
     // batch 1: add a chord + delete a cycle edge (no stranding)
-    val (traj1, st1) = GraphOps.pageRankStateFold(traj0, st0,
+    val r1 = GraphOps.graphStatesFoldPack(traj0, None, None, st0,
       Seq((1L, 3L)).toDF("id1", "id2"),
       Seq((4L, 1L)).toDF("id1", "id2"), iterations = 4)
+    val (traj1, st1) = (r1.traj, r1.edgesDeg)
     val g1 = edges0.filterNot(_ == ((4L, 1L))) :+ ((1L, 3L))
     val stG1 = GraphOps.pageRankEdgeState(g1.toDF("id1", "id2"))
     assert(trajRows(traj1) == trajRows(
@@ -1109,9 +1171,9 @@ class GraphOpsSpec extends SparkSpec {
         (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq,
       "folded edge state == from-scratch edge state")
     // batch 2 folds FROM THE FOLDED PAIR: merge the two components
-    val (traj2, _) = GraphOps.pageRankStateFold(traj1, st1,
+    val traj2 = GraphOps.graphStatesFoldPack(traj1, None, None, st1,
       Seq((4L, 5L)).toDF("id1", "id2"),
-      Seq.empty[(Long, Long)].toDF("id1", "id2"), iterations = 4)
+      Seq.empty[(Long, Long)].toDF("id1", "id2"), iterations = 4).traj
     val g2 = g1 :+ ((4L, 5L))
     assert(prRows(traj2.filter(col("iter") === 4)) ==
       prRows(GraphOps.pageRank(g2.toDF("id1", "id2"), iterations = 4)),
@@ -1145,7 +1207,7 @@ class GraphOpsSpec extends SparkSpec {
     df.select("node", "iter", "pr").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
 
-  // ---- pprStateFold + graphStatesFold (round 16) ----
+  // ---- PPR and multi-family signed folds (graphStatesFoldPack) ----
 
   test("pprStateFold: the folded pair's tip equals the reference over " +
        "the survivors on the PRIOR universe; delete then re-add " +
@@ -1158,8 +1220,10 @@ class GraphOpsSpec extends SparkSpec {
     val del = Seq((1L, 2L), (2L, 3L)).toDF("id1", "id2")
     // fold 1: strand nodes 1, 2, 3 (1 is a seed — keeps its damped
     // teleport share; 2, 3 decay to zero)
-    val (traj1, st1) = GraphOps.pprStateFold(traj0, st0,
-      del.limit(0), del, seeds, iterations = 4)
+    val r1 = GraphOps.graphStatesFoldPack(
+      GraphOps.pageRankTrajectoryFromEdges(st0, iterations = 4),
+      Some(traj0), None, st0, del.limit(0), del, iterations = 4)
+    val traj1 = r1.pprTraj.get
     assert(prRows(traj1.filter(col("iter") === 4)) ==
       refRanks(universeOf(priorSeq), Seq((10L, 11L)),
         Some(Set(1L, 10L)), 4),
@@ -1168,8 +1232,8 @@ class GraphOpsSpec extends SparkSpec {
         .forall(_.getLong(1) == 5L),
       "every iterate keeps one row per universe node (stranded included)")
     // fold 2 FROM THE FOLDED PAIR: re-add — bit-for-bit identity
-    val (traj2, _) = GraphOps.pprStateFold(traj1, st1,
-      del, del.limit(0), seeds, iterations = 4)
+    val traj2 = GraphOps.graphStatesFoldPack(r1.traj, Some(traj1), None,
+      r1.edgesDeg, del, del.limit(0), iterations = 4).pprTraj.get
     assert(trajRows(traj2) == trajRows(traj0),
       "delete + re-add across maintained PPR folds == original trajectory")
   }
@@ -1182,9 +1246,11 @@ class GraphOpsSpec extends SparkSpec {
     val seeds = Seq(1L, 5L).toDF("node")
     val st0 = GraphOps.pageRankEdgeState(edges0.toDF("id1", "id2"))
     val traj0 = GraphOps.pprTrajectoryFromEdges(st0, seeds, iterations = 4)
-    val (traj1, st1) = GraphOps.pprStateFold(traj0, st0,
-      Seq((1L, 3L)).toDF("id1", "id2"),
-      Seq((4L, 1L)).toDF("id1", "id2"), seeds, iterations = 4)
+    val r1 = GraphOps.graphStatesFoldPack(
+      GraphOps.pageRankTrajectoryFromEdges(st0, iterations = 4),
+      Some(traj0), None, st0, Seq((1L, 3L)).toDF("id1", "id2"),
+      Seq((4L, 1L)).toDF("id1", "id2"), iterations = 4)
+    val (traj1, st1) = (r1.pprTraj.get, r1.edgesDeg)
     val g1 = (edges0.filterNot(_ == ((4L, 1L))) :+ ((1L, 3L)))
       .toDF("id1", "id2")
     val stG1 = GraphOps.pageRankEdgeState(g1)
@@ -1220,9 +1286,10 @@ class GraphOpsSpec extends SparkSpec {
       val ptraj = GraphOps.pprTrajectoryFromEdges(st,
         seedSet.toSeq.toDF("node"), iterations = 5)
       val labels = GraphOps.connectedComponents(prior)
-      val (t2, p2, l2, st2) = GraphOps.graphStatesFold(traj, Some(ptraj),
+      val r = GraphOps.graphStatesFoldPack(traj, Some(ptraj),
         Some(labels), st, adds.toDF("id1", "id2"), del.toDF("id1", "id2"),
         iterations = 5)
+      val (t2, p2, l2, st2) = (r.traj, r.pprTraj, r.labels, r.edgesDeg)
       val surv = edges.filterNot(e =>
         del.contains(e) || del.contains(e.swap)) ++ adds
       assert(prRows(t2.filter(col("iter") === 5)) ==
@@ -1357,9 +1424,10 @@ class GraphOpsSpec extends SparkSpec {
     val labels = GraphOps.connectedComponents(prior)
     val adds = Seq((1L, 3L))
     val dels = Seq((4L, 5L)) // splits the path near the delta end
-    val (t2, p2, l2, _) = GraphOps.graphStatesFold(traj, Some(ptraj),
+    val r1 = GraphOps.graphStatesFoldPack(traj, Some(ptraj),
       Some(labels), st, adds.toDF("id1", "id2"), dels.toDF("id1", "id2"),
       iterations = 4)
+    val (t2, p2, l2) = (r1.traj, r1.pprTraj, r1.labels)
     val surv = edges.filterNot(_ == ((4L, 5L))) ++ adds
     assert(prRows(t2.filter(col("iter") === 4)) ==
       refRanks(nodes, surv, None, 4), "plain tip via the fold branch")
@@ -1370,15 +1438,11 @@ class GraphOpsSpec extends SparkSpec {
           (surv ++ nodes.map(v => (v, v))).toDF("id1", "id2"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
       "labels reflect the split via the scoped re-eval")
-    // standalone pprStateFold takes the same branch and its merged
-    // trajectory keeps folding: re-add the deleted edge, drop the
-    // chord — back to the original pair bit for bit
-    val (pt1, pst1) = GraphOps.pprStateFold(ptraj, st,
-      adds.toDF("id1", "id2"), dels.toDF("id1", "id2"),
-      seedSet.toSeq.toDF("node"), iterations = 4)
-    val (pt2, _) = GraphOps.pprStateFold(pt1, pst1,
+    // the merged PPR trajectory keeps folding: re-add the deleted
+    // edge, drop the chord — back to the original pair bit for bit
+    val pt2 = GraphOps.graphStatesFoldPack(t2, p2, None, r1.edgesDeg,
       dels.toDF("id1", "id2"), adds.toDF("id1", "id2"),
-      seedSet.toSeq.toDF("node"), iterations = 4)
+      iterations = 4).pprTraj.get
     assert(trajRows(pt2) == trajRows(ptraj),
       "swap-back across two fold-branch PPR folds is an identity")
   }
@@ -1392,8 +1456,9 @@ class GraphOpsSpec extends SparkSpec {
       Seq(1L).toDF("node"), iterations = 3)
     val labels = GraphOps.connectedComponents(prior)
     val empty = Seq.empty[(Long, Long)].toDF("id1", "id2")
-    val (t2, p2, l2, _) = GraphOps.graphStatesFold(traj, Some(ptraj),
+    val r = GraphOps.graphStatesFoldPack(traj, Some(ptraj),
       Some(labels), st, empty, empty, iterations = 3)
+    val (t2, p2, l2) = (r.traj, r.pprTraj, r.labels)
     assert(trajRows(t2) == trajRows(traj) &&
       trajRows(p2.get) == trajRows(ptraj),
       "empty batch leaves both trajectories bit-identical")
@@ -1406,7 +1471,7 @@ class GraphOpsSpec extends SparkSpec {
     val ptrajBig = GraphOps.pprTrajectoryFromEdges(stBig,
       Seq(1L).toDF("node"), iterations = 3)
     val e = intercept[IllegalArgumentException] {
-      GraphOps.graphStatesFold(traj, Some(ptrajBig), None, st,
+      GraphOps.graphStatesFoldPack(traj, Some(ptrajBig), None, st,
         Seq((1L, 3L)).toDF("id1", "id2"), empty, iterations = 3)
     }
     assert(e.getMessage.contains("universe"),
@@ -1436,7 +1501,7 @@ class GraphOpsSpec extends SparkSpec {
         s"saw ${GraphOps.lastBranch}")
     // the shared three-family fold prices with the same probe
     GraphOps.lastBranch = None
-    GraphOps.graphStatesFold(traj, None, None, st,
+    GraphOps.graphStatesFoldPack(traj, None, None, st,
       Seq((2L, 4L)).toDF("id1", "id2"),
       Seq.empty[(Long, Long)].toDF("id1", "id2"), iterations = 4)
     assert(GraphOps.lastBranch.contains(("graphStatesFold", false)),
@@ -1467,7 +1532,7 @@ class GraphOpsSpec extends SparkSpec {
     assert(e2.getMessage.contains("holds 3 iterations"),
       s"PPR fold refuses: ${e2.getMessage}")
     val e3 = intercept[IllegalArgumentException] {
-      GraphOps.graphStatesFold(traj, None, None, st, d, none,
+      GraphOps.graphStatesFoldPack(traj, None, None, st, d, none,
         iterations = 5)
     }
     assert(e3.getMessage.contains("holds 3 iterations"),
@@ -1477,7 +1542,7 @@ class GraphOpsSpec extends SparkSpec {
     val shallow = GraphOps.pprTrajectoryFromEdges(st, seeds,
       iterations = 2)
     val e4 = intercept[IllegalArgumentException] {
-      GraphOps.graphStatesFold(traj, Some(shallow), None, st, d, none,
+      GraphOps.graphStatesFoldPack(traj, Some(shallow), None, st, d, none,
         iterations = 3)
     }
     assert(e4.getMessage.contains("depth differs"),

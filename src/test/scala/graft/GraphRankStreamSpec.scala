@@ -109,11 +109,12 @@ class GraphRankStreamSpec extends SparkSpec {
     val st = GraphRankStream.readState(spark, table)
     def trajSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    val stF = GraphOps.pageRankEdgeState(gF)
     assert(trajSet(st.traj) == trajSet(
-        GraphOps.pageRankTrajectory(gF, iterations = 4)),
+        GraphOps.pageRankTrajectoryFromEdges(stF, iterations = 4)),
       "maintained plain trajectory == from-scratch trajectory")
     assert(trajSet(st.pprTraj.get) == trajSet(
-        GraphOps.pprTrajectory(gF, seeds, iterations = 4)),
+        GraphOps.pprTrajectoryFromEdges(stF, seeds, iterations = 4)),
       "maintained PPR trajectory == from-scratch trajectory")
     assert(st.appliedBatch >= 3L, "the applied-batch marker advanced")
   }
@@ -130,10 +131,10 @@ class GraphRankStreamSpec extends SparkSpec {
     def foldEpoch(epoch: Long): Unit = {
       val st = GraphRankStream.readState(spark, table)
       if (epoch > st.appliedBatch) {
-        val (t2, s2) = GraphOps.pageRankStateFold(st.traj, st.edgesDeg,
-          Seq((1L, 3L)).toDF("id1", "id2"),
+        val r = GraphOps.graphStatesFoldPack(st.traj, None, None,
+          st.edgesDeg, Seq((1L, 3L)).toDF("id1", "id2"),
           Seq.empty[(Long, Long)].toDF("id1", "id2"), 3)
-        GraphRankStream.publish(table, t2, s2, epoch, 3)
+        GraphRankStream.publish(table, r.traj, r.edgesDeg, epoch, 3)
       }
     }
     foldEpoch(0L)
