@@ -1,5 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
+
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
   *
@@ -48,8 +57,21 @@ package graft
   * A query that throws in the timed pass is recorded in an "errors"
   * array and its time is reported as -1 — failures must be visible in
   * the artifact, not only on stderr.
+  *
+  * Layers: the full record's "layers" object breaks each query's
+  * reported pass into plan ms, jobs, stages, tasks, task run/CPU/GC,
+  * shuffle, spill and peak execution memory ([[Profile]]), so a
+  * wall-time delta names the layer that moved (`scripts/bench_diff.py`).
+  * With SPARK_GRAFT_PLAN_DIR set, the selected queries' formatted
+  * plans are written there as `<query>.txt` after the timed sweeps
+  * (operators' eager checkpoints show as LogicalRDD leaves). Two
+  * builds compare by running both, in alternation, with the same
+  * SPARK_GRAFT_BENCH_ONLY.
   */
 object Bench {
+  private[graft] def fmt(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
@@ -69,7 +91,9 @@ object Bench {
           System.err.println(s"[bench] warm-up $name failed: ${e.getMessage}")
         }
       }
-    def timeOnce(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    val profile = new Profile(spark)
+    def timeOnce(name: String, fn: (SparkSession, String) => DataFrame,
+                 pass: Int): Double = profile.attributed(s"$name#$pass") {
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -115,8 +139,8 @@ object Bench {
     // sweep the full suite once per pass (pass 2+ re-runs the whole
     // alphabet) so a query's samples are minutes apart — independent
     // draws w.r.t. minutes-scale co-tenant load bursts
-    val sweeps = (1 to passes).map { _ =>
-      ordered.map { case (name, fn) => timeOnce(name, fn) }
+    val sweeps = (1 to passes).map { p =>
+      ordered.map { case (name, fn) => timeOnce(name, fn, p) }
     }
     val results = ordered.zipWithIndex.map { case ((name, _), i) =>
       val ts = sweeps.map(_(i))
@@ -125,8 +149,21 @@ object Bench {
       (name, if (ok.isEmpty) -1.0 else ok.min, ts)
     }
     val loadEnd = load1()
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    // the layers of the pass whose time is reported
+    val layers = profile.layers(results.map { case (k, v, ts) =>
+      s"$k#${ts.indexOf(v) + 1}" }: _*).zip(results)
+      .map { case (l, (k, _, _)) => "\"" + k + "\":" + l.json }.mkString("{", ",", "}")
+    sys.env.get("SPARK_GRAFT_PLAN_DIR").foreach { dir =>
+      Files.createDirectories(Paths.get(dir))
+      ordered.foreach { case (name, fn) =>
+        try {
+          val txt = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
+          Files.write(Paths.get(dir, s"$name.txt"), txt.getBytes("UTF-8"))
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] plan of $name failed: ${e.getMessage}")
+        }
+      }
+    }
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val pts = results.map { case (k, _, ts) =>
@@ -135,14 +172,13 @@ object Bench {
     val total = results.map(_._2).filter(_ >= 0).sum
     val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val gate = s"""{"max_load":${fmt(maxLoad)},"waited_s":$waitedS,"gated_start":$gatedStart}"""
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","passes":$passes,"pass_times":$pts,"loadavg":{"start":${fmt(loadStart)},"end":${fmt(loadEnd)}},"load_gate":$gate,"errors":$errs}"""
+    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","passes":$passes,"pass_times":$pts,"loadavg":{"start":${fmt(loadStart)},"end":${fmt(loadEnd)}},"load_gate":$gate,"errors":$errs,"layers":$layers}"""
     println(line)
     // the driver's artifact keeps only a truncated stdout tail, which
     // loses the first ~half of the per-query timings — persist the
     // complete record ourselves so every query has regression history
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (line + "\n").getBytes("UTF-8"))
+    try Files.write(Paths.get(out), (line + "\n").getBytes("UTF-8"))
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $out: ${e.getMessage}")
     }
@@ -155,5 +191,129 @@ object Bench {
     val compact = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","passes":$passes,"n_queries":${results.size},"loadavg":{"start":${fmt(loadStart)},"end":${fmt(loadEnd)}},"load_gate":$gate,"errors":$errs,"full_record":"$out"}"""
     println(compact)
     spark.stop()
+  }
+}
+
+/** One query's work by layer: planning (analysis, optimization and
+  * physical planning of every SQL execution it started), the jobs,
+  * stages and tasks it ran, executor time, shuffle and spill bytes,
+  * and the largest per-task peak of execution memory. */
+private[graft] final case class Layers(
+    planMs: Long = 0, jobs: Long = 0, stages: Long = 0, tasks: Long = 0,
+    taskRunMs: Long = 0, taskCpuNs: Long = 0, gcMs: Long = 0,
+    shuffleReadBytes: Long = 0, shuffleWriteBytes: Long = 0,
+    spillBytes: Long = 0, peakExecMemBytes: Long = 0) {
+  def json: String = {
+    import Bench.fmt
+    s"""{"plan_ms":$planMs,"jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
+      s""""task_run_s":${fmt(taskRunMs / 1e3)},"task_cpu_s":${fmt(taskCpuNs / 1e9)},""" +
+      s""""gc_s":${fmt(gcMs / 1e3)},"shuffle_read_bytes":$shuffleReadBytes,""" +
+      s""""shuffle_write_bytes":$shuffleWriteBytes,"spill_bytes":$spillBytes,""" +
+      s""""peak_exec_mem_bytes":$peakExecMemBytes}"""
+  }
+}
+
+/** Attributes Spark work to named keys through one `SparkListener`
+  * and one `QueryExecutionListener`. [[attributed]] puts a job tag
+  * (a thread-local property, inherited by the threads Spark starts
+  * for a query's broadcasts and subqueries) on the calling thread for
+  * the length of its body and clears it after; the jobs started under
+  * the tag, and their stages and tasks, count toward its key. A SQL
+  * execution's planning counts toward the key whose tagged interval
+  * holds its start (the execution listener sees no job tags), so
+  * keys are meant to be timed one at a time, as [[Bench]] does.
+  * Untagged work is not counted.
+  *
+  * The listeners run on the listener bus, after the fact: [[layers]]
+  * first runs a one-task marker job under its own key and waits for
+  * that task's end, which the bus delivers after every event posted
+  * before it. */
+private[graft] final class Profile(spark: SparkSession) {
+  private val Tag = "graft-profile:"
+  private val Drain = "#drain"
+
+  private val work = mutable.Map.empty[String, Layers].withDefaultValue(Layers())
+  private val stageKey = mutable.Map.empty[Int, String]
+  private val intervals = mutable.ArrayBuffer.empty[(String, Long, Long)]
+  private val plans = mutable.ArrayBuffer.empty[(Long, Long)]
+
+  private val jobListener = new SparkListener {
+    override def onJobStart(e: SparkListenerJobStart): Unit = Profile.this.synchronized {
+      val tags = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+      tags.toSeq.flatMap(_.split(",")).find(_.startsWith(Tag)).map(_.stripPrefix(Tag))
+        .foreach { k =>
+          work(k) = work(k).copy(jobs = work(k).jobs + 1)
+          e.stageIds.foreach(stageKey(_) = k)
+        }
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      Profile.this.synchronized {
+        stageKey.get(e.stageInfo.stageId)
+          .foreach(k => work(k) = work(k).copy(stages = work(k).stages + 1))
+      }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Profile.this.synchronized {
+      for (k <- stageKey.get(e.stageId); m <- Option(e.taskMetrics)) {
+        val l = work(k)
+        work(k) = l.copy(tasks = l.tasks + 1,
+          taskRunMs = l.taskRunMs + m.executorRunTime,
+          taskCpuNs = l.taskCpuNs + m.executorCpuTime,
+          gcMs = l.gcMs + m.jvmGCTime,
+          shuffleReadBytes = l.shuffleReadBytes +
+            m.shuffleReadMetrics.remoteBytesRead + m.shuffleReadMetrics.localBytesRead,
+          shuffleWriteBytes = l.shuffleWriteBytes + m.shuffleWriteMetrics.bytesWritten,
+          spillBytes = l.spillBytes + m.memoryBytesSpilled + m.diskBytesSpilled,
+          peakExecMemBytes = math.max(l.peakExecMemBytes, m.peakExecutionMemory))
+      }
+    }
+  }
+
+  /** Each execution's planning: (first phase start, summed phase ms). */
+  private val planListener = new QueryExecutionListener {
+    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = record(qe)
+    override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = record(qe)
+    private def record(qe: QueryExecution): Unit = {
+      val phases = qe.tracker.phases.values
+      if (phases.nonEmpty) Profile.this.synchronized {
+        plans += ((phases.map(_.startTimeMs).min,
+          phases.map(p => p.endTimeMs - p.startTimeMs).sum))
+      }
+    }
+  }
+
+  spark.sparkContext.addSparkListener(jobListener)
+  spark.listenerManager.register(planListener)
+
+  /** Runs `body` with its Spark work attributed to `key`. */
+  def attributed[T](key: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val start = System.currentTimeMillis()
+    sc.addJobTag(Tag + key)
+    try body
+    finally {
+      sc.removeJobTag(Tag + key)
+      synchronized(intervals += ((key, start, System.currentTimeMillis())))
+    }
+  }
+
+  /** What each key ran so far, once the bus has delivered it. */
+  def layers(keys: String*): Seq[Layers] = {
+    val drained = synchronized(work(Drain).tasks) + 1
+    attributed(Drain)(spark.sparkContext.parallelize(Seq(0), 1).count())
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (synchronized(work(Drain).tasks) < drained && System.nanoTime() < deadline)
+      Thread.sleep(5)
+    synchronized {
+      keys.map { k =>
+        val in = intervals.filter(_._1 == k)
+        work(k).copy(planMs = plans.collect {
+          case (at, ms) if in.exists { case (_, s, e) => s <= at && at <= e } => ms
+        }.sum)
+      }
+    }
+  }
+
+  def close(): Unit = {
+    spark.sparkContext.removeSparkListener(jobListener)
+    spark.listenerManager.unregister(planListener)
   }
 }

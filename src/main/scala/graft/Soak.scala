@@ -352,7 +352,7 @@ object Soak {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** INTERLEAVED base/soaked reps — B,S,B,S…, the AbQueries pattern.
+  /** INTERLEAVED base/soaked reps — B,S,B,S….
     * The soak self-loads the machine (SOAK_r12's loadavg ramped
     * 1.99 → 16.57 within the run), and the old all-base-then-all-
     * soaked order meant the soaked side systematically sampled the

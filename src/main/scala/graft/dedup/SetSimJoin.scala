@@ -58,86 +58,50 @@ object SetSimJoin {
     .distinct()
     .localCheckpoint()
 
-  private[graft] def jaccardJoinOfShingles(ds: DataFrame, tNum: Long,
-                                           tDen: Long): DataFrame =
-    jaccardJoinImpl(ds, tNum, tDen, fusedDf = true, pruneVerify = false,
-      indexPrefix = false)
-
-  /** Shape knobs, A/B-measured at sf1 (round 8, two interleaved
-    * single-JVM sessions × 3 reps via [[graft.AbSetsim]]):
-    *  - `fusedDf` (ADOPTED — min 15.1 s vs 16.2 s baseline, 4/6
-    *    pairwise rep wins): document frequency via a window over `sh`
-    *    — ONE corpus exchange — instead of groupBy(sh) + equi-join
-    *    back (aggregate exchange + a second corpus exchange for the
-    *    join). The window's sort-per-partition costs less than the
-    *    extra full shuffle of the shingle relation, and one fewer
-    *    corpus exchange is the structurally right trade at 100 TB.
-    *  - `pruneVerify` (REJECTED — 18.2-20.3 s, consistently worse):
-    *    left-semi restricting the verification relation to candidate
-    *    docs re-pays a corpus pass that the verify joins then pay
-    *    again; at t=1/2 most docs are in some candidate anyway. (The
-    *    prune IS right when candidates are a small slice — that is
-    *    routedJoin, where the miner guarantees it.)
-    *  - `indexPrefix` (REJECTED round 9 — 18.7/19.5/21.6 s vs
-    *    fusedDf's 16.7/15.4/14.9 s, LOSES every interleaved rep at
-    *    sf1; correctness parity confirmed by the harness's equality
-    *    gate): the All-Pairs/PPJoin INDEXING-PREFIX asymmetry
-    *    (Bayardo §3.1 "Exploiting the threshold during indexing";
-    *    Xiao's self-join form). Order each pair by
-    *    (set size, doc_id); the SMALLER record x only ever needs to
-    *    collide with a no-smaller partner y, and the length filter
-    *    gives |y| ≥ |x| ⟹ α(x,y) = ⌈t/(1+t)·(|x|+|y|)⌉ ≥
-    *    ⌈2t/(1+t)·|x|⌉ — a strictly larger overlap floor than the
-    *    symmetric ⌈t·|x|⌉, so x's join prefix shrinks from
-    *    |x| − ⌈t|x|⌉ + 1 (≈|x|/2 at t=1/2) to |x| − ⌈2t/(1+t)|x|⌉ + 1
-    *    (≈|x|/3). The candidate join pairs shortPrefix(smaller) with
-    *    longPrefix(larger); a qualifying pair still collides there by
-    *    the prefix lemma with the pairwise α, which both per-record
-    *    floors lower-bound — recall stays 100% (property-spec'd
-    *    against the symmetric shape). WHY it loses anyway: the
-    *    df-ascending global order already packs each prefix with the
-    *    corpus's RAREST shingles, so the symmetric candidate set
-    *    after the length+positional filters is close to the verified
-    *    set — there is little volume left for a shorter prefix to
-    *    remove — while the asymmetric join pays a disjunctive
-    *    size-order predicate and id re-canonicalization on every
-    *    collision. Kept as a measured knob: on a corpus whose prefix
-    *    df distribution is flatter (prefixes less selective), the
-    *    asymmetry is the first thing to re-try.
+  /** The shipped shape; its alternatives were A/B-measured at sf1
+    * (two interleaved single-JVM sessions × 3 reps, rounds 8-9):
+    *  - document frequency via a window over `sh` (ADOPTED — min
+    *    15.1 s vs 16.2 s for groupBy(sh) + equi-join back, 4/6
+    *    pairwise rep wins): ONE corpus exchange instead of an
+    *    aggregate exchange plus a second corpus exchange for the join,
+    *    the structurally right trade at 100 TB.
+    *  - pruning the verification relation to candidate docs (REJECTED
+    *    — 18.2-20.3 s, consistently worse): the left-semi re-pays a
+    *    corpus pass that the verify joins then pay again; at t=1/2
+    *    most docs are in some candidate anyway. (The prune IS right
+    *    when candidates are a small slice — that is routedJoin, where
+    *    the miner guarantees it.)
+    *  - the All-Pairs/PPJoin INDEXING-PREFIX asymmetry (REJECTED —
+    *    18.7/19.5/21.6 s vs 16.7/15.4/14.9 s, lost every rep, output
+    *    identical; Bayardo §3.1, Xiao's self-join form): with pairs
+    *    ordered by (set size, doc_id) the smaller record's join prefix
+    *    can shrink from |x| − ⌈t|x|⌉ + 1 to |x| − ⌈2t/(1+t)|x|⌉ + 1
+    *    (≈|x|/2 → ≈|x|/3 at t=1/2) at 100% recall. It loses because
+    *    the df-ascending order already packs each prefix with the
+    *    RAREST shingles, so the symmetric candidates after the length
+    *    and positional filters are close to the verified set, while
+    *    the asymmetric join pays a disjunctive size-order predicate and
+    *    id re-canonicalization per collision. On a corpus with flatter
+    *    prefix df (less selective prefixes) it is the first thing to
+    *    re-try, timed with `Bench` under SPARK_GRAFT_BENCH_ONLY.
     */
-  private[graft] def jaccardJoinImpl(ds: DataFrame, tNum: Long, tDen: Long,
-                                     fusedDf: Boolean,
-                                     pruneVerify: Boolean,
-                                     indexPrefix: Boolean = false): DataFrame = {
+  private[graft] def jaccardJoinOfShingles(ds: DataFrame, tNum: Long,
+                                           tDen: Long): DataFrame = {
     require(tNum > 0 && tNum <= tDen, "threshold must be in (0, 1]")
     // one doc_id exchange serves both windows (rank and set size):
     // same partitioning, Catalyst stacks the two Window nodes
     val byDoc = Window.partitionBy(col("doc_id"))
-    val ranked =
-      if (fusedDf)
-        ds.withColumn("df", count(lit(1)).over(Window.partitionBy(col("sh"))))
-          .select(col("doc_id"), col("sh"),
-            row_number().over(byDoc.orderBy(col("df"), col("sh"))).as("rnk"),
-            count(lit(1)).over(byDoc).as("n"))
-      else {
-        val dfreq = ds.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-        ds.join(dfreq, "sh")
-          .select(col("doc_id"), col("sh"),
-            row_number().over(byDoc.orderBy(col("df"), col("sh"))).as("rnk"),
-            count(lit(1)).over(byDoc).as("n"))
-      }
+    val ranked = ds
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("sh"))))
+      .select(col("doc_id"), col("sh"),
+        row_number().over(byDoc.orderBy(col("df"), col("sh"))).as("rnk"),
+        count(lit(1)).over(byDoc).as("n"))
     // symmetric prefix length |x| − ⌈t·|x|⌉ + 1; ceil as integer
-    // floor-div. shortEnd is the INDEXING prefix end
-    // |x| − ⌈2t/(1+t)·|x|⌉ + 1 (see `indexPrefix` above) — carried on
-    // every row so the asymmetric join can filter the smaller side
-    // without a second prefix relation.
+    // floor-div
     val need = floor((col("n") * lit(tNum) + lit(tDen - 1)) / lit(tDen))
       .cast("long")
-    val needIdx = floor((col("n") * lit(2 * tNum) + lit(tDen + tNum - 1)) /
-      lit(tDen + tNum)).cast("long")
     val prefix = ranked.filter(col("rnk") <= col("n") - need + lit(1))
-      .select(col("sh"), col("doc_id"), col("n"), col("rnk"),
-        (col("n") - needIdx + lit(1)).as("short_end"))
+      .select(col("sh"), col("doc_id"), col("n"), col("rnk"))
     // PPJoin positional filter (Xiao, Wang, Lin & Yu, "Efficient
     // similarity joins for near duplicate detection", WWW 2008): a
     // collision at ranks (ra, rb) bounds the overlap by
@@ -150,41 +114,16 @@ object SetSimJoin {
       (lit(1L) + least(col("a.n") - col("a.rnk"),
                        col("b.n") - col("b.rnk"))) * lit(tDen + tNum) >=
         (col("a.n") + col("b.n")) * lit(tNum)
-    val cand =
-      if (indexPrefix)
-        // a = the (size, id)-smaller record, restricted to its SHORT
-        // prefix; b stays on the symmetric prefix. Output ids
-        // re-canonicalized to id1 < id2 below.
-        prefix.as("a").join(prefix.as("b"),
-            col("a.sh") === col("b.sh") &&
-              (col("a.n") < col("b.n") ||
-                (col("a.n") === col("b.n") &&
-                  col("a.doc_id") < col("b.doc_id"))) &&
-              col("a.rnk") <= col("a.short_end") &&
-              // length filter, a is the smaller side by construction
-              col("a.n") * lit(tDen) >= col("b.n") * lit(tNum) &&
-              positional)
-          .select(
-            when(col("a.doc_id") < col("b.doc_id"), col("a.doc_id"))
-              .otherwise(col("b.doc_id")).as("id1"),
-            when(col("a.doc_id") < col("b.doc_id"), col("b.doc_id"))
-              .otherwise(col("a.doc_id")).as("id2"),
-            when(col("a.doc_id") < col("b.doc_id"), col("a.n"))
-              .otherwise(col("b.n")).as("n1"),
-            when(col("a.doc_id") < col("b.doc_id"), col("b.n"))
-              .otherwise(col("a.n")).as("n2"))
-          .distinct()
-      else
-        prefix.as("a").join(prefix.as("b"),
-            col("a.sh") === col("b.sh") &&
-              col("a.doc_id") < col("b.doc_id") &&
-              // length filter: J ≥ t forces t·|y| ≤ |x| for |x| ≤ |y|
-              least(col("a.n"), col("b.n")) * lit(tDen) >=
-                greatest(col("a.n"), col("b.n")) * lit(tNum) &&
-              positional)
-          .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"),
-            col("a.n").as("n1"), col("b.n").as("n2"))
-          .distinct()
+    val cand = prefix.as("a").join(prefix.as("b"),
+        col("a.sh") === col("b.sh") &&
+          col("a.doc_id") < col("b.doc_id") &&
+          // length filter: J ≥ t forces t·|y| ≤ |x| for |x| ≤ |y|
+          least(col("a.n"), col("b.n")) * lit(tDen) >=
+            greatest(col("a.n"), col("b.n")) * lit(tNum) &&
+          positional)
+      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"),
+        col("a.n").as("n1"), col("b.n").as("n2"))
+      .distinct()
     // exact verification: count the shared shingles of each candidate
     // pair — cost is Σ|x| over candidates, never over all pairs.
     // (An array_intersect variant — one shingle ARRAY per doc joined
@@ -194,15 +133,9 @@ object SetSimJoin {
     // replicates the full arrays through two wide shuffles, while the
     // exploded form keeps shuffle rows narrow and the count
     // map-side-combinable. The exploded form is the 100 TB posture.)
-    val dsv =
-      if (pruneVerify) {
-        val candDocs = cand.select(col("id1").as("doc_id"))
-          .unionAll(cand.select(col("id2").as("doc_id"))).distinct()
-        ds.join(candDocs, Seq("doc_id"), "left_semi")
-      } else ds
     val verified = cand
-      .join(dsv.select(col("doc_id").as("id1"), col("sh")), "id1")
-      .join(dsv.select(col("doc_id").as("id2"), col("sh")), Seq("id2", "sh"))
+      .join(ds.select(col("doc_id").as("id1"), col("sh")), "id1")
+      .join(ds.select(col("doc_id").as("id2"), col("sh")), Seq("id2", "sh"))
       .groupBy(col("id1"), col("id2"), col("n1"), col("n2"))
       .agg(count(lit(1)).as("inter"))
     verified

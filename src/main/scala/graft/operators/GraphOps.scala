@@ -40,11 +40,11 @@ object GraphOps {
     * every later reader (concurrent readers of an unmaterialized
     * block serialize on the block lock, so work is never doubled);
     * what it removes is one full AQE action — result-stage + driver
-    * round-trip — per checkpoint, which the phase profile
-    * (AbGraphParts) measured as the iterative families' floor at
-    * bench scale: the per-round compute is tiny next to the fixed
-    * per-action overhead, and a 5-iterate trajectory paid 6 such
-    * actions where one final action materializes the same blocks.
+    * round-trip — per checkpoint, which a per-phase job profile
+    * measured as the iterative families' floor at bench scale: the
+    * per-round compute is tiny next to the fixed per-action overhead,
+    * and a 5-iterate trajectory paid 6 such actions where one final
+    * action materializes the same blocks.
     * Use [[materialize]] only where a driver probe (count/head)
     * follows immediately anyway, or where eagerness is the point. */
   private def lazyMat(df: DataFrame): DataFrame =
@@ -72,7 +72,7 @@ object GraphOps {
     * neither).
     *
     * AQE is inherited, not toggled: round 9 re-measured both scales
-    * with interleaved reps (graft.AbPagerank) and AQE-on won or tied
+    * with interleaved single-session reps and AQE-on won or tied
     * everywhere (sf0.1: 2.62 vs 3.51 s; sf1: 12.11 vs 12.77 s) —
     * ARCHITECTURE §7 carries the full table and round 8's
     * non-reproducing counter-measurement. */
@@ -1482,34 +1482,24 @@ object GraphOps {
     * grows, so a stable count means an empty frontier and the loop
     * exits without a separate isEmpty job.
     *
-    * `aggShape = false` keeps the first-cut distinct + anti-join
-    * round for [[graft.AbBfs]]'s interleaved comparison: two extra
-    * shuffles and a second job per round, plus an anti-join side that
-    * re-scans every prior frontier checkpoint. At sf0.1 the shapes
-    * TIE within session noise (both ~3.1-3.5 s; per-round cost is
-    * 0.06-0.11 s against ~1.5 s of pair-gen + setup, profiled per
-    * round) — the agg fold is kept because its per-round cost is one
-    * shuffle of the |V|-row distance relation with O(1) checkpoint
-    * scans, where the anti-join shape scans all k prior frontier
-    * checkpoints in round k, the term that grows with graph diameter
-    * at 100 TB. */
-  def bfsHops(pairs: DataFrame, seeds: DataFrame, maxHops: Int = 10,
-              aggShape: Boolean = true): DataFrame = {
+    * The first cut's round shape — distinct + anti-join against every
+    * prior frontier, two extra shuffles and a second job per round —
+    * TIED this one at sf0.1 (round 9, interleaved reps: both
+    * ~3.1-3.5 s; per-round cost 0.06-0.11 s against ~1.5 s of
+    * pair-gen + setup) and LOST every rep at sf1 (min 17.11 / median
+    * 17.75 s here vs 18.14 / 19.27 s). The agg fold is kept because
+    * its per-round cost is one shuffle of the |V|-row distance
+    * relation with O(1) checkpoint scans, where the anti-join shape
+    * scans all k prior frontier checkpoints in round k, the term that
+    * grows with graph diameter at 100 TB. */
+  def bfsHops(pairs: DataFrame, seeds: DataFrame, maxHops: Int = 10): DataFrame = {
     require(maxHops >= 0, "bfsHops: maxHops must be >= 0")
-    val sym = symmetrize(pairs)
-    if (aggShape) {
-      // lazy checkpoints: hop0's count() below materializes the whole
-      // setup chain — edges included — in a single job
-      val edges = sym.repartition(col("src")).dropDuplicates("src", "dst")
-        .localCheckpoint(eager = false)
-      val hop0 = bfsSeedFrontier(edges, seeds).localCheckpoint(eager = false)
-      bfsRoundsAgg(edges, hop0, maxHops)
-    } else {
-      val edges = sym.distinct().repartition(col("src"))
-        .localCheckpoint(eager = true)
-      val hop0 = materialize(bfsSeedFrontier(edges, seeds))
-      bfsRoundsAntiJoin(edges, hop0, maxHops)
-    }
+    // lazy checkpoints: hop0's count() below materializes the whole
+    // setup chain — edges included — in a single job
+    val edges = symmetrize(pairs).repartition(col("src"))
+      .dropDuplicates("src", "dst").localCheckpoint(eager = false)
+    val hop0 = bfsSeedFrontier(edges, seeds).localCheckpoint(eager = false)
+    bfsRoundsAgg(edges, hop0, maxHops)
   }
 
   /** Both directions of an (id1, id2) pair list as (src, dst) rows,
@@ -1593,28 +1583,6 @@ object GraphOps {
       size = n
     }
     (dist, false, mask)
-  }
-
-  /** First-cut round shape: distinct + anti-join vs all prior
-    * frontiers (three shuffles; measurement baseline only). */
-  private def bfsRoundsAntiJoin(edges: DataFrame, hop0: DataFrame,
-                                maxHops: Int): DataFrame = {
-    var frontier = hop0
-    var visited = Vector(frontier)
-    var hop = 0
-    var done = frontier.isEmpty
-    while (!done && hop < maxHops) {
-      hop += 1
-      val dist = visited.reduce(_ unionByName _).select(col("doc_id"))
-      val next = materialize(
-        edges.join(frontier.select(col("doc_id").as("src")), Seq("src"))
-          .select(col("dst").as("doc_id")).distinct()
-          .join(dist, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), lit(hop).as("hops")))
-      if (next.isEmpty) done = true
-      else { visited = visited :+ next; frontier = next }
-    }
-    visited.reduce(_ unionByName _)
   }
 
   /** k-core of an UNDIRECTED edge list `pairs` (columns id1, id2):

@@ -232,7 +232,7 @@ object Relational {
     * fractional digits — recovering the IDENTICAL exact decimals the
     * old decimal(30,4) shape summed, so the double casts and the
     * DuckDB oracle (unchanged) agree bit-for-bit by construction.
-    * Interleaved A/B at sf0.1 (AbRegression): 1.45 s → 1.08 s min.
+    * Interleaved single-session A/B at sf0.1: 1.45 s → 1.08 s min.
     *
     * CONTRACT: `l_quantity` / `l_extendedprice` must carry ≤ 2
     * decimal places (TPC-H prices and quantities do). The ×100 long

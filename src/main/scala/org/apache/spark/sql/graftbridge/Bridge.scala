@@ -20,20 +20,6 @@ object Bridge {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.analyzed
 
-  /** An isolated twin of `spark`: same SparkContext and shared state,
-    * but a CLONED session state — runtime SQLConf values, registered
-    * functions, temp views, and planner strategies all copy over, and
-    * conf changes on the twin never touch the original. This is the
-    * correct scope for an operator that must flip a conf for the
-    * duration of its own execution (e.g. an AQE-off iteration loop):
-    * `newSession()` would RESET runtime conf to builder defaults,
-    * while mutating the caller's conf leaks the flip to concurrent
-    * queries. `cloneSession` is the `private[sql]` primitive Spark
-    * itself uses to isolate streaming micro-batch execution. */
-  def isolatedTwin(spark: SparkSession): SparkSession =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .cloneSession()
-
   /** Column over a raw Catalyst expression — for expressions with
     * non-column construction parameters that the function-registry
     * seam (children-only) can't carry. */

@@ -16,9 +16,11 @@ class SetSimJoinSpec extends SparkSpec {
     .toDF("doc_id", "text")
 
   /** Brute-force shingle-set Jaccard over every pair — the oracle the
-    * prefix filter must never fall short of. */
-  private def brute(rows: Seq[(Long, String)],
-                    tNum: Long, tDen: Long): Set[(Long, Long, Long)] = {
+    * prefix filter must never fall short of. Full output rows: (id1,
+    * id2, n1, n2, inter, jaccard rounded HALF_UP at 4 as Spark's
+    * `round` does). */
+  private def brute(rows: Seq[(Long, String)], tNum: Long, tDen: Long)
+      : Set[(Long, Long, Long, Long, Long, Double)] = {
     def shingles(t: String): Set[String] = {
       val toks = t.split(" ")
       if (toks.length < 3) Set.empty
@@ -29,8 +31,11 @@ class SetSimJoinSpec extends SparkSpec {
     (for {
       (i, si) <- sets; (j, sj) <- sets if i < j
       inter = (si & sj).size.toLong
-      if inter * tDen >= tNum * (si.size + sj.size - inter)
-    } yield (i, j, inter)).toSet
+      union = si.size + sj.size - inter
+      if inter * tDen >= tNum * union
+    } yield (i, j, si.size.toLong, sj.size.toLong, inter,
+      BigDecimal(inter.toDouble / union)
+        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSet
   }
 
   test("exact dup pair has jaccard 1.0; near dup above threshold") {
@@ -58,34 +63,9 @@ class SetSimJoinSpec extends SparkSpec {
     }
     for ((tn, td) <- Seq((1L, 2L), (3L, 10L), (7L, 10L), (1L, 1L))) {
       val got = SetSimJoin.jaccardJoin(rows.toDF("doc_id", "text"), tn, td)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(4))).toSet
-      assert(got == brute(rows, tn, td), s"threshold $tn/$td")
-    }
-  }
-
-  test("indexing-prefix shape is complete: identical to the symmetric shape at every threshold") {
-    // the measured-but-rejected round-9 knob must stay CORRECT while
-    // it stays on the shelf: same seeded corpus as the brute-force
-    // test, both shapes, value-identical output (the prefix lemma
-    // with the pairwise overlap floor α ≥ max(⌈2t/(1+t)|x|⌉, ⌈t|y|⌉))
-    val vocab = Array("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
-      "eta", "theta", "iota", "kappa", "data", "spark", "join", "scan")
-    def doc(seed: Int, len: Int): String =
-      (0 until len).map(i => vocab(math.abs(seed * 31 + i * 7) % vocab.length))
-        .mkString(" ")
-    val rows = (0 until 24).map { i =>
-      val base = doc(i % 6, 8 + (i % 5))
-      val tail = if (i % 3 == 0) " data spark join" else ""
-      (i.toLong, base + tail)
-    }
-    for ((tn, td) <- Seq((1L, 2L), (3L, 10L), (7L, 10L), (1L, 1L))) {
-      val ds = SetSimJoin.shingleRelation(rows.toDF("doc_id", "text"))
-      def shape(idx: Boolean) = SetSimJoin
-        .jaccardJoinImpl(ds, tn, td, fusedDf = true, pruneVerify = false,
-          indexPrefix = idx)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4), r.getDouble(5))).toSet
-      assert(shape(true) == shape(false), s"threshold $tn/$td")
+      assert(got == brute(rows, tn, td), s"threshold $tn/$td")
     }
   }
 
