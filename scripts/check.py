@@ -17,11 +17,18 @@ Reads outDir/<name>/ parquet (written by graft.Verify) and
 outDir/oracle_sql.json, runs each oracle SQL in DuckDB against views
 over sfDir's parquet tables, and compares: schema (column names),
 row count, and value equality after sorting columns by name and rows
-by all columns.
+by all columns. Each PASS/FAIL line carries the oracle's DuckDB
+seconds after the query name.
 """
-import sys, json, glob, math
+import sys, json, glob, math, shutil, tempfile, time
 import duckdb
 import pandas as pd
+
+# DuckDB spills into a temporary directory that the check removes on
+# exit, capped at this size: a runaway oracle then fails its own row as
+# SQL-FAIL instead of filling the disk (DuckDB's defaults are '.tmp' in
+# the working directory and 90 % of the free disk).
+SPILL_CAP = "4GiB"
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
@@ -151,7 +158,17 @@ def main():
     TOLERANT = "--tolerant" in sys.argv[1:]
     sf_dir = args[0] if len(args) > 0 else "/root/testdata/sf0.001"
     out_dir = args[1] if len(args) > 1 else "/tmp/graft_verify"
+    spill_dir = tempfile.mkdtemp(prefix="graft_check_")
+    try:
+        n_ok, n_rows = run_oracles(sf_dir, out_dir, spill_dir)
+    finally:
+        shutil.rmtree(spill_dir, ignore_errors=True)
+    sys.exit(0 if n_ok == n_rows else 1)
+
+def run_oracles(sf_dir, out_dir, spill_dir):
     con = duckdb.connect()
+    con.execute(f"SET temp_directory = '{spill_dir}'")
+    con.execute(f"SET max_temp_directory_size = '{SPILL_CAP}'")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
@@ -161,7 +178,7 @@ def main():
         verify_errors = json.load(open(f"{out_dir}/verify_errors.json"))
     except Exception:
         verify_errors = {}
-    results = {}
+    results, secs = {}, {}
     for name, sql in sorted(oracle.items()):
         if name in verify_errors:
             results[name] = f"SPARK-ERR {verify_errors[name][:200]}"
@@ -176,17 +193,24 @@ def main():
         except Exception as e:
             results[name] = f"READ-FAIL {e}"
             continue
+        t0 = time.monotonic()
         try:
             duck_df = con.execute(sql).fetchdf()
         except Exception as e:
             results[name] = f"SQL-FAIL {str(e)[:200]}"
             continue
+        finally:
+            secs[name] = time.monotonic() - t0
         results[name] = compare(name, spark_df, duck_df) or "OK"
     n_ok = sum(1 for v in results.values() if v == "OK")
+    # the seconds go after the name: perfbench/seed_expected.py reads
+    # the second token of a PASS line as the query name
     for name, v in results.items():
-        print(("PASS " if v == "OK" else "FAIL ") + name + ("" if v == "OK" else f"  -> {v}"))
+        took = f" {secs[name]:.2f}s" if name in secs else ""
+        print(("PASS " if v == "OK" else "FAIL ") + name + took
+              + ("" if v == "OK" else f"  -> {v}"))
     print(f"\n{n_ok}/{len(results)} queries match")
-    sys.exit(0 if n_ok == len(results) else 1)
+    return n_ok, len(results)
 
 if __name__ == "__main__":
     main()

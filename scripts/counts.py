@@ -6,7 +6,9 @@ drift).
 Usage: python3 scripts/counts.py
 Reads bench_full.json (always) and the newest CORRECTNESS_r*.json
 (driver-written, if any), prints a summary block to paste or diff
-against README.md's "Current numbers".
+against README.md's "Current numbers", including the suite totals of
+bench_full.json's per-query cost layers (jobs, planning, task run,
+shuffle, spill) and the five queries with the most jobs.
 """
 import glob
 import json
@@ -22,6 +24,24 @@ def main():
     errors = bench.get("errors", [])
     print(f"bench_full.json: {n_bench} queries, total {bench['value']}"
           f" {bench.get('unit', 's')}, errors: {errors or 'none'}")
+
+    # Suite-level cost layers: Bench's per-query `layers` summed over
+    # the suite, and the queries that run the most Spark jobs.
+    layers = bench.get("layers", {})
+    if layers:
+        def tot(k):
+            return sum(v.get(k, 0) for v in layers.values())
+        print(f"  layers over {len(layers)} queries: jobs {tot('jobs')},"
+              f" planning {tot('plan_ms')} ms,"
+              f" task run {tot('task_run_s'):.1f} s,"
+              f" shuffle read {tot('shuffle_read_bytes') / 1e6:.1f} MB /"
+              f" write {tot('shuffle_write_bytes') / 1e6:.1f} MB,"
+              f" spill {tot('spill_bytes') / 1e6:.1f} MB")
+        top = sorted(layers.items(),
+                     key=lambda kv: (-kv[1].get("jobs", 0), kv[0]))[:5]
+        print("  most jobs: " + ", ".join(
+            f"{q} {v.get('jobs', 0)} ({bench['queries'].get(q, '?')} s)"
+            for q, v in top))
 
     # Spike transparency (round 11): with per-query pass_times in the
     # artifact, a co-tenant spike self-documents as ONE outlier pass.

@@ -1706,7 +1706,92 @@ object SparkEntry {
     s"""tk AS (
        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
        |shagg AS (SELECT doc_id, $sums FROM tk GROUP BY doc_id),
-       |sim AS (SELECT doc_id, $bits AS simhash16 FROM shagg)""".stripMargin
+       |sim AS MATERIALIZED (SELECT doc_id, $bits AS simhash16 FROM shagg)""".stripMargin
+  }
+
+  // The simhash-graph oracles below are built from the pieces written
+  // once here. A CTE that the SQL reads more than once is MATERIALIZED:
+  // DuckDB 1.0 inlines a CTE at each reference, so an unmarked pair
+  // miner is re-run by every edge, degree and rank iterate that reads
+  // it (the delta PageRank rows then outgrow DuckDB's memory).
+
+  /** Hamming distance between two equal-length '0'/'1' strings. */
+  private def hammingSql(a: String, b: String, bits: Int = 16): String =
+    (1 to bits).map(i =>
+      s"CASE WHEN substr($a, $i, 1) = substr($b, $i, 1) THEN 0 ELSE 1 END")
+      .mkString(" + ")
+
+  /** The simhash pair miner: sim, a self join on the simhash prefix
+    * (plen grows with the corpus), and ed0(id1, id2, hamming), the
+    * id1 < id2 pairs within Hamming distance 3. */
+  private val SimPairsSql =
+    s"""$SimhashSql,
+       |plv AS (SELECT CASE WHEN count(*) >= 320000 THEN 10
+       |                    WHEN count(*) >= 20000 THEN 9
+       |                    ELSE 8 END AS plen FROM documents),
+       |pre AS MATERIALIZED (SELECT doc_id, simhash16,
+       |          substr(simhash16, 1, (SELECT plen FROM plv)) AS prefix
+       |        FROM sim),
+       |prs AS (
+       |  SELECT a.doc_id AS id1, b.doc_id AS id2,
+       |         ${hammingSql("a.simhash16", "b.simhash16")} AS hamming
+       |  FROM pre a JOIN pre b
+       |    ON a.prefix = b.prefix AND a.doc_id < b.doc_id),
+       |ed0 AS MATERIALIZED (
+       |  SELECT id1, id2, hamming FROM prs WHERE hamming <= 3)""".stripMargin
+
+  /** e(a, b), both directions of a pair relation's (id1, id2), and
+    * reach(a, b), its transitive closure: least(a, min(b)) over reach
+    * is a's component minimum. Needs WITH RECURSIVE. */
+  private def closureSql(pairs: String): String =
+    s"""e AS MATERIALIZED (SELECT id1 AS a, id2 AS b FROM $pairs
+       |      UNION SELECT id2, id1 FROM $pairs),
+       |reach AS (
+       |  SELECT a, b FROM e
+       |  UNION
+       |  SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a)""".stripMargin
+
+  /** The fixed-iteration integer rank recurrence over the row's
+    * edges(src, dst), deg(src, deg) and node universe nodesv, unrolled
+    * into pr0 .. pr<iterations> because recursive CTEs forbid
+    * aggregation in the recursive term. seeds = None is the uniform
+    * teleport: pr0 = 10¹² // n and each step adds (10¹²·15)//100//n.
+    * Some(rule) puts the teleport mass on the nodes matching rule:
+    * tele = 10¹² // n_seeds on a seed and 0 elsewhere, pr0 = tele, and
+    * each step adds (15·tele)//100. A node with no in-edges keeps the
+    * bare teleport term through the left join. */
+  private def rankRecurrenceSql(iterations: Int, seeds: Option[String]): String = {
+    val (pr0, universe, term) = seeds match {
+      case None =>
+        ("""nn AS MATERIALIZED (SELECT count(*) AS n_nodes FROM nodesv),
+           |pr0 AS MATERIALIZED (
+           |  SELECT node, 1000000000000 // (SELECT n_nodes FROM nn) AS pr
+           |  FROM nodesv)""".stripMargin,
+         "nodesv", "(1000000000000 * 15) // 100 // (SELECT n_nodes FROM nn)")
+      case Some(rule) =>
+        (s"""seedsv AS MATERIALIZED (SELECT node FROM nodesv WHERE $rule),
+            |ns AS (SELECT count(*) AS n_seeds FROM seedsv),
+            |tele AS MATERIALIZED (SELECT n.node,
+            |           CASE WHEN s.node IS NOT NULL
+            |             THEN 1000000000000 // (SELECT n_seeds FROM ns)
+            |             ELSE CAST(0 AS BIGINT) END AS tele
+            |         FROM nodesv n LEFT JOIN seedsv s ON s.node = n.node),
+            |pr0 AS MATERIALIZED (SELECT node, tele AS pr FROM tele)""".stripMargin,
+         "tele", "(15 * t.tele) // 100")
+    }
+    val steps = (1 to iterations).map { i =>
+      s"""pr$i AS MATERIALIZED (
+         |  SELECT t.node,
+         |    $term +
+         |    (85 * coalesce(c.s, CAST(0 AS BIGINT))) // 100 AS pr
+         |  FROM $universe t LEFT JOIN (
+         |    SELECT e.dst AS node, CAST(sum(p.pr // dg.deg) AS BIGINT) AS s
+         |    FROM edges e
+         |      JOIN pr${i - 1} p ON p.node = e.src
+         |      JOIN deg dg ON dg.src = e.src
+         |    GROUP BY e.dst) c ON c.node = t.node)""".stripMargin
+    }
+    (pr0 +: steps).mkString(",\n")
   }
 
   /** BM25 CTE chain over `toks` ending in bm25r(qid, doc_id, score,
@@ -4092,28 +4177,8 @@ object SparkEntry {
     // leakage-safe folds: same md5 fold formula as sample_folds but
     // over the closure's cluster labels (unpaired docs = own cluster)
     "sample_folds_safe" -> {
-      val hammingTerms = (1 to 16).map(i =>
-        s"CASE WHEN substr(sh1, $i, 1) = substr(sh2, $i, 1) THEN 0 ELSE 1 END")
-        .mkString(" + ")
-      s"""WITH RECURSIVE $SimhashSql,
-         |plv AS (SELECT CASE WHEN count(*) >= 320000 THEN 10
-         |                    WHEN count(*) >= 20000 THEN 9
-         |                    ELSE 8 END AS plen FROM documents),
-         |pre AS (SELECT doc_id, simhash16,
-         |          substr(simhash16, 1, (SELECT plen FROM plv)) AS prefix
-         |        FROM sim),
-         |prs AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2,
-         |         a.simhash16 AS sh1, b.simhash16 AS sh2
-         |  FROM pre a JOIN pre b
-         |    ON a.prefix = b.prefix AND a.doc_id < b.doc_id),
-         |ed0 AS (SELECT id1, id2 FROM prs WHERE $hammingTerms <= 3),
-         |e AS (SELECT id1 AS a, id2 AS b FROM ed0
-         |      UNION SELECT id2, id1 FROM ed0),
-         |reach AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a),
+      s"""WITH RECURSIVE $SimPairsSql,
+         |${closureSql("ed0")},
          |lab AS (SELECT a AS doc_id, least(a, min(b)) AS cluster_id
          |        FROM reach GROUP BY a),
          |alld AS (
@@ -4220,17 +4285,12 @@ object SparkEntry {
         s"SELECT doc_id, $b AS band, md5($m) AS key FROM sig"
       }.mkString("\n UNION ALL ")
       s"""${MinhashSigSql.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |band AS ($bandRows),
-         |p AS (
+         |band AS MATERIALIZED ($bandRows),
+         |p AS MATERIALIZED (
          |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
          |  FROM band a JOIN band b
          |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-         |e AS (SELECT id1 AS a, id2 AS b FROM p
-         |      UNION SELECT id2, id1 FROM p),
-         |reach AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a)
+         |${closureSql("p")}
          |SELECT a AS doc_id, least(a, min(b)) AS cluster_id
          |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin
     },
@@ -4240,26 +4300,8 @@ object SparkEntry {
          |SELECT doc_id, simhash16 FROM sim ORDER BY doc_id""".stripMargin,
 
     "doc_contrastive_pairs" -> {
-      val hp = (1 to 16).map(i =>
-        s"CASE WHEN substr(sh1, $i, 1) = substr(sh2, $i, 1) THEN 0 ELSE 1 END")
-        .mkString(" + ")
-      val hn = (1 to 16).map(i =>
-        s"CASE WHEN substr(s1.simhash16, $i, 1) = substr(s2.simhash16, $i, 1) THEN 0 ELSE 1 END")
-        .mkString(" + ")
-      s"""WITH $SimhashSql,
-         |plv AS (SELECT CASE WHEN count(*) >= 320000 THEN 10
-         |                    WHEN count(*) >= 20000 THEN 9
-         |                    ELSE 8 END AS plen FROM documents),
-         |pre AS (SELECT doc_id, simhash16,
-         |          substr(simhash16, 1, (SELECT plen FROM plv)) AS prefix
-         |        FROM sim),
-         |pairs AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2,
-         |         a.simhash16 AS sh1, b.simhash16 AS sh2
-         |  FROM pre a JOIN pre b
-         |    ON a.prefix = b.prefix AND a.doc_id < b.doc_id),
-         |pos AS (SELECT id1, id2, $hp AS hamming, 1 AS label
-         |        FROM pairs WHERE $hp <= 3),
+      s"""WITH $SimPairsSql,
+         |pos AS MATERIALIZED (SELECT id1, id2, hamming, 1 AS label FROM ed0),
          |n1 AS (SELECT count(*) AS n FROM documents),
          |cnd AS (SELECT least(doc_id, j) AS id1, greatest(doc_id, j) AS id2
          |        FROM (SELECT doc_id,
@@ -4272,7 +4314,9 @@ object SparkEntry {
          |       JOIN documents d2 ON c.id2 = d2.doc_id
          |       LEFT JOIN pos p ON p.id1 = c.id1 AND p.id2 = c.id2
          |       WHERE p.id1 IS NULL),
-         |neg AS (SELECT e.id1, e.id2, $hn AS hamming, 0 AS label
+         |neg AS (SELECT e.id1, e.id2,
+         |          ${hammingSql("s1.simhash16", "s2.simhash16")} AS hamming,
+         |          0 AS label
          |        FROM ex e JOIN sim s1 ON s1.doc_id = e.id1
          |                  JOIN sim s2 ON s2.doc_id = e.id2)
          |SELECT id1, id2, hamming, label FROM pos
@@ -4281,23 +4325,8 @@ object SparkEntry {
     },
 
     "dedup_simhash_pairs" -> {
-      val hammingTerms = (1 to 16).map(i =>
-        s"CASE WHEN substr(sh1, $i, 1) = substr(sh2, $i, 1) THEN 0 ELSE 1 END")
-        .mkString(" + ")
-      s"""WITH $SimhashSql,
-         |plv AS (SELECT CASE WHEN count(*) >= 320000 THEN 10
-         |                    WHEN count(*) >= 20000 THEN 9
-         |                    ELSE 8 END AS plen FROM documents),
-         |pre AS (SELECT doc_id, simhash16,
-         |          substr(simhash16, 1, (SELECT plen FROM plv)) AS prefix
-         |        FROM sim),
-         |pairs AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2,
-         |         a.simhash16 AS sh1, b.simhash16 AS sh2
-         |  FROM pre a JOIN pre b
-         |    ON a.prefix = b.prefix AND a.doc_id < b.doc_id),
-         |ham AS (SELECT id1, id2, $hammingTerms AS hamming FROM pairs)
-         |SELECT id1, id2, hamming FROM ham WHERE hamming <= 3
+      s"""WITH $SimPairsSql
+         |SELECT id1, id2, hamming FROM ed0
          |ORDER BY id1, id2""".stripMargin
     },
 
@@ -4305,27 +4334,13 @@ object SparkEntry {
     // middles, RA index as integer ppm (1000000 // deg summed) —
     // engine-portable, no float summation order
     "graph_common_neighbors" -> {
-      val hammingTerms = (1 to 16).map(i =>
-        s"CASE WHEN substr(sh1, $i, 1) = substr(sh2, $i, 1) THEN 0 ELSE 1 END")
-        .mkString(" + ")
-      s"""WITH $SimhashSql,
-         |plv AS (SELECT CASE WHEN count(*) >= 320000 THEN 10
-         |                    WHEN count(*) >= 20000 THEN 9
-         |                    ELSE 8 END AS plen FROM documents),
-         |pre AS (SELECT doc_id, simhash16,
-         |          substr(simhash16, 1, (SELECT plen FROM plv)) AS prefix
-         |        FROM sim),
-         |prs AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2,
-         |         a.simhash16 AS sh1, b.simhash16 AS sh2
-         |  FROM pre a JOIN pre b
-         |    ON a.prefix = b.prefix AND a.doc_id < b.doc_id),
-         |ed0 AS (SELECT id1, id2 FROM prs WHERE $hammingTerms <= 3),
-         |sym AS (SELECT id1 AS m, id2 AS x FROM ed0
+      s"""WITH $SimPairsSql,
+         |sym AS MATERIALIZED (SELECT id1 AS m, id2 AS x FROM ed0
          |        UNION ALL SELECT id2, id1 FROM ed0),
          |deg AS (SELECT m, count(*) AS deg FROM sym GROUP BY m),
          |mids AS (SELECT * FROM deg WHERE deg <= 64),
-         |adj AS (SELECT s.m, s.x, d.deg FROM sym s JOIN mids d USING (m)),
+         |adj AS MATERIALIZED (
+         |  SELECT s.m, s.x, d.deg FROM sym s JOIN mids d USING (m)),
          |sc AS (SELECT a.x AS id1, b.x AS id2, count(*) AS cn,
          |         CAST(sum(1000000 // a.deg) AS BIGINT) AS ra_ppm
          |       FROM adj a JOIN adj b ON a.m = b.m AND a.x < b.x
@@ -4341,28 +4356,8 @@ object SparkEntry {
     // fixpoint equals the component minimum, which the recursive
     // closure computes exactly (same oracle idea as dedup_clusters)
     "graph_components" -> {
-      val hammingTerms = (1 to 16).map(i =>
-        s"CASE WHEN substr(sh1, $i, 1) = substr(sh2, $i, 1) THEN 0 ELSE 1 END")
-        .mkString(" + ")
-      s"""WITH RECURSIVE $SimhashSql,
-         |plv AS (SELECT CASE WHEN count(*) >= 320000 THEN 10
-         |                    WHEN count(*) >= 20000 THEN 9
-         |                    ELSE 8 END AS plen FROM documents),
-         |pre AS (SELECT doc_id, simhash16,
-         |          substr(simhash16, 1, (SELECT plen FROM plv)) AS prefix
-         |        FROM sim),
-         |prs AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2,
-         |         a.simhash16 AS sh1, b.simhash16 AS sh2
-         |  FROM pre a JOIN pre b
-         |    ON a.prefix = b.prefix AND a.doc_id < b.doc_id),
-         |ed0 AS (SELECT id1, id2 FROM prs WHERE $hammingTerms <= 3),
-         |e AS (SELECT id1 AS a, id2 AS b FROM ed0
-         |      UNION SELECT id2, id1 FROM ed0),
-         |reach AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a)
+      s"""WITH RECURSIVE $SimPairsSql,
+         |${closureSql("ed0")}
          |SELECT a AS doc_id, least(a, min(b)) AS cluster_id
          |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin
     },
@@ -4370,28 +4365,8 @@ object SparkEntry {
     // survivors = rank-1 per closure cluster by (n_chars desc, doc_id),
     // with unpaired documents surviving as their own cluster
     "dedup_canonical" -> {
-      val hammingTerms = (1 to 16).map(i =>
-        s"CASE WHEN substr(sh1, $i, 1) = substr(sh2, $i, 1) THEN 0 ELSE 1 END")
-        .mkString(" + ")
-      s"""WITH RECURSIVE $SimhashSql,
-         |plv AS (SELECT CASE WHEN count(*) >= 320000 THEN 10
-         |                    WHEN count(*) >= 20000 THEN 9
-         |                    ELSE 8 END AS plen FROM documents),
-         |pre AS (SELECT doc_id, simhash16,
-         |          substr(simhash16, 1, (SELECT plen FROM plv)) AS prefix
-         |        FROM sim),
-         |prs AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2,
-         |         a.simhash16 AS sh1, b.simhash16 AS sh2
-         |  FROM pre a JOIN pre b
-         |    ON a.prefix = b.prefix AND a.doc_id < b.doc_id),
-         |ed0 AS (SELECT id1, id2 FROM prs WHERE $hammingTerms <= 3),
-         |e AS (SELECT id1 AS a, id2 AS b FROM ed0
-         |      UNION SELECT id2, id1 FROM ed0),
-         |reach AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a),
+      s"""WITH RECURSIVE $SimPairsSql,
+         |${closureSql("ed0")},
          |lab AS (SELECT a AS doc_id, least(a, min(b)) AS cluster_id
          |        FROM reach GROUP BY a),
          |alld AS (
@@ -4412,28 +4387,8 @@ object SparkEntry {
     // the odd-involving delta in as label stars, and must land on the
     // same labels the closure computes over every pair
     "graph_components_delta" -> {
-      val hammingTerms = (1 to 16).map(i =>
-        s"CASE WHEN substr(sh1, $i, 1) = substr(sh2, $i, 1) THEN 0 ELSE 1 END")
-        .mkString(" + ")
-      s"""WITH RECURSIVE $SimhashSql,
-         |plv AS (SELECT CASE WHEN count(*) >= 320000 THEN 10
-         |                    WHEN count(*) >= 20000 THEN 9
-         |                    ELSE 8 END AS plen FROM documents),
-         |pre AS (SELECT doc_id, simhash16,
-         |          substr(simhash16, 1, (SELECT plen FROM plv)) AS prefix
-         |        FROM sim),
-         |prs AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2,
-         |         a.simhash16 AS sh1, b.simhash16 AS sh2
-         |  FROM pre a JOIN pre b
-         |    ON a.prefix = b.prefix AND a.doc_id < b.doc_id),
-         |ed0 AS (SELECT id1, id2 FROM prs WHERE $hammingTerms <= 3),
-         |e AS (SELECT id1 AS a, id2 AS b FROM ed0
-         |      UNION SELECT id2, id1 FROM ed0),
-         |reach AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a)
+      s"""WITH RECURSIVE $SimPairsSql,
+         |${closureSql("ed0")}
          |SELECT a AS doc_id, least(a, min(b)) AS cluster_id
          |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin
     },
@@ -4444,34 +4399,15 @@ object SparkEntry {
     // (stranded nodes fall back to self-labels) — blind to the
     // touched/untouched scoping the operator uses
     "graph_components_delete" -> {
-      val hammingTerms = (1 to 16).map(i =>
-        s"CASE WHEN substr(sh1, $i, 1) = substr(sh2, $i, 1) THEN 0 ELSE 1 END")
-        .mkString(" + ")
-      s"""WITH RECURSIVE $SimhashSql,
-         |plv AS (SELECT CASE WHEN count(*) >= 320000 THEN 10
-         |                    WHEN count(*) >= 20000 THEN 9
-         |                    ELSE 8 END AS plen FROM documents),
-         |pre AS (SELECT doc_id, simhash16,
-         |          substr(simhash16, 1, (SELECT plen FROM plv)) AS prefix
-         |        FROM sim),
-         |prs AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2,
-         |         a.simhash16 AS sh1, b.simhash16 AS sh2
-         |  FROM pre a JOIN pre b
-         |    ON a.prefix = b.prefix AND a.doc_id < b.doc_id),
-         |ed0 AS (SELECT id1, id2 FROM prs WHERE $hammingTerms <= 3),
-         |surv AS (SELECT id1, id2 FROM ed0 WHERE (id1 + id2) % 13 <> 0),
+      s"""WITH RECURSIVE $SimPairsSql,
+         |surv AS MATERIALIZED (
+         |  SELECT id1, id2 FROM ed0 WHERE (id1 + id2) % 13 <> 0),
          |-- DISTINCT over UNION ALL, not bare UNION: under WITH
          |-- RECURSIVE DuckDB parses any `a UNION b` CTE as an
          |-- anchor+step recursion and skips the cross-dedupe
          |allnodes AS (SELECT DISTINCT n FROM (
          |  SELECT id1 AS n FROM ed0 UNION ALL SELECT id2 FROM ed0)),
-         |e AS (SELECT id1 AS a, id2 AS b FROM surv
-         |      UNION SELECT id2, id1 FROM surv),
-         |reach AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a),
+         |${closureSql("surv")},
          |lab AS (SELECT a AS doc_id, least(a, min(b)) AS cluster_id
          |        FROM reach GROUP BY a)
          |SELECT an.n AS doc_id,
@@ -4487,23 +4423,8 @@ object SparkEntry {
     // bounded walks IS the BFS distance for every node within the cap
     // while nodes beyond it are absent from both engines
     "graph_bfs" -> {
-      val hammingTerms = (1 to 16).map(i =>
-        s"CASE WHEN substr(sh1, $i, 1) = substr(sh2, $i, 1) THEN 0 ELSE 1 END")
-        .mkString(" + ")
-      s"""WITH RECURSIVE $SimhashSql,
-         |plv AS (SELECT CASE WHEN count(*) >= 320000 THEN 10
-         |                    WHEN count(*) >= 20000 THEN 9
-         |                    ELSE 8 END AS plen FROM documents),
-         |pre AS (SELECT doc_id, simhash16,
-         |          substr(simhash16, 1, (SELECT plen FROM plv)) AS prefix
-         |        FROM sim),
-         |prs AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2,
-         |         a.simhash16 AS sh1, b.simhash16 AS sh2
-         |  FROM pre a JOIN pre b
-         |    ON a.prefix = b.prefix AND a.doc_id < b.doc_id),
-         |ed0 AS (SELECT id1, id2 FROM prs WHERE $hammingTerms <= 3),
-         |e AS (SELECT id1 AS a, id2 AS b FROM ed0
+      s"""WITH RECURSIVE $SimPairsSql,
+         |e AS MATERIALIZED (SELECT id1 AS a, id2 AS b FROM ed0
          |      UNION SELECT id2, id1 FROM ed0),
          |seeds AS (SELECT DISTINCT a AS doc_id FROM e WHERE a % 7 = 0),
          |walk AS (
@@ -4523,22 +4444,7 @@ object SparkEntry {
     // converges within the bound and the 30-peel prefix otherwise —
     // the same contract on both engines
     "graph_kcore" -> {
-      val hammingTerms = (1 to 16).map(i =>
-        s"CASE WHEN substr(sh1, $i, 1) = substr(sh2, $i, 1) THEN 0 ELSE 1 END")
-        .mkString(" + ")
-      s"""WITH RECURSIVE $SimhashSql,
-         |plv AS (SELECT CASE WHEN count(*) >= 320000 THEN 10
-         |                    WHEN count(*) >= 20000 THEN 9
-         |                    ELSE 8 END AS plen FROM documents),
-         |pre AS (SELECT doc_id, simhash16,
-         |          substr(simhash16, 1, (SELECT plen FROM plv)) AS prefix
-         |        FROM sim),
-         |prs AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2,
-         |         a.simhash16 AS sh1, b.simhash16 AS sh2
-         |  FROM pre a JOIN pre b
-         |    ON a.prefix = b.prefix AND a.doc_id < b.doc_id),
-         |ed0 AS (SELECT id1, id2 FROM prs WHERE $hammingTerms <= 3),
+      s"""WITH RECURSIVE $SimPairsSql,
          |e AS (SELECT id1 AS src, id2 AS dst FROM ed0 WHERE id1 <> id2
          |      UNION SELECT id2, id1 FROM ed0 WHERE id1 <> id2),
          |peel AS (
@@ -4555,45 +4461,12 @@ object SparkEntry {
     },
 
     "graph_pagerank" -> {
-      val hammingTerms = (1 to 16).map(i =>
-        s"CASE WHEN substr(sh1, $i, 1) = substr(sh2, $i, 1) THEN 0 ELSE 1 END")
-        .mkString(" + ")
-      // the fixed-iteration integer recurrence, unrolled: recursive
-      // CTEs restrict aggregation in the recursive term, so five
-      // mechanical CTE steps replay pr0..pr5 exactly
-      val iterCtes = (1 to 5).map { i =>
-        s"""pr$i AS (
-           |  SELECT n.node,
-           |    (1000000000000 * 15) // 100 // (SELECT n_nodes FROM nn) +
-           |    (85 * coalesce(c.s, CAST(0 AS BIGINT))) // 100 AS pr
-           |  FROM nodesv n LEFT JOIN (
-           |    SELECT e.dst AS node, CAST(sum(p.pr // dg.deg) AS BIGINT) AS s
-           |    FROM edges e
-           |      JOIN pr${i - 1} p ON p.node = e.src
-           |      JOIN deg dg ON dg.src = e.src
-           |    GROUP BY e.dst) c ON c.node = n.node)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $SimhashSql,
-         |plv AS (SELECT CASE WHEN count(*) >= 320000 THEN 10
-         |                    WHEN count(*) >= 20000 THEN 9
-         |                    ELSE 8 END AS plen FROM documents),
-         |pre AS (SELECT doc_id, simhash16,
-         |          substr(simhash16, 1, (SELECT plen FROM plv)) AS prefix
-         |        FROM sim),
-         |prs AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2,
-         |         a.simhash16 AS sh1, b.simhash16 AS sh2
-         |  FROM pre a JOIN pre b
-         |    ON a.prefix = b.prefix AND a.doc_id < b.doc_id),
-         |ed0 AS (SELECT id1, id2 FROM prs WHERE $hammingTerms <= 3),
-         |edges AS (SELECT id1 AS src, id2 AS dst FROM ed0
+      s"""WITH $SimPairsSql,
+         |edges AS MATERIALIZED (SELECT id1 AS src, id2 AS dst FROM ed0
          |          UNION SELECT id2, id1 FROM ed0),
-         |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-         |nodesv AS (SELECT DISTINCT src AS node FROM edges),
-         |nn AS (SELECT count(*) AS n_nodes FROM nodesv),
-         |pr0 AS (SELECT node, 1000000000000 // (SELECT n_nodes FROM nn) AS pr
-         |        FROM nodesv),
-         |$iterCtes
+         |deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM edges GROUP BY src),
+         |nodesv AS MATERIALIZED (SELECT DISTINCT src AS node FROM edges),
+         |${rankRecurrenceSql(5, seeds = None)}
          |SELECT node, pr FROM pr5
          |ORDER BY pr DESC, node LIMIT 50""".stripMargin
     },
@@ -4605,50 +4478,20 @@ object SparkEntry {
     // prior ∪ delta — an independent from-scratch derivation, blind
     // to the trajectory/ball machinery
     "graph_pagerank_delta" -> {
-      val hammingTerms = (1 to 16).map(i =>
-        s"CASE WHEN substr(sh1, $i, 1) = substr(sh2, $i, 1) THEN 0 ELSE 1 END")
-        .mkString(" + ")
-      val iterCtes = (1 to 5).map { i =>
-        s"""pr$i AS (
-           |  SELECT n.node,
-           |    (1000000000000 * 15) // 100 // (SELECT n_nodes FROM nn) +
-           |    (85 * coalesce(c.s, CAST(0 AS BIGINT))) // 100 AS pr
-           |  FROM nodesv n LEFT JOIN (
-           |    SELECT e.dst AS node, CAST(sum(p.pr // dg.deg) AS BIGINT) AS s
-           |    FROM edges e
-           |      JOIN pr${i - 1} p ON p.node = e.src
-           |      JOIN deg dg ON dg.src = e.src
-           |    GROUP BY e.dst) c ON c.node = n.node)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $SimhashSql,
-         |plv AS (SELECT CASE WHEN count(*) >= 320000 THEN 10
-         |                    WHEN count(*) >= 20000 THEN 9
-         |                    ELSE 8 END AS plen FROM documents),
-         |pre AS (SELECT doc_id, simhash16,
-         |          substr(simhash16, 1, (SELECT plen FROM plv)) AS prefix
-         |        FROM sim),
-         |prs AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2,
-         |         a.simhash16 AS sh1, b.simhash16 AS sh2
-         |  FROM pre a JOIN pre b
-         |    ON a.prefix = b.prefix AND a.doc_id < b.doc_id),
-         |ed0 AS (SELECT id1, id2 FROM prs WHERE $hammingTerms <= 3),
+      s"""WITH $SimPairsSql,
          |d0 AS (SELECT id1, id2 FROM ed0 WHERE (id1 + id2) % 101 = 0),
-         |p0 AS (SELECT id1, id2 FROM ed0 WHERE (id1 + id2) % 101 <> 0),
-         |n0 AS (SELECT id1 AS n FROM p0 UNION SELECT id2 FROM p0),
+         |p0 AS MATERIALIZED (SELECT id1, id2 FROM ed0 WHERE (id1 + id2) % 101 <> 0),
+         |n0 AS MATERIALIZED (SELECT id1 AS n FROM p0 UNION SELECT id2 FROM p0),
          |dd AS (SELECT id1, id2 FROM d0
          |       WHERE id1 IN (SELECT n FROM n0)
          |         AND id2 IN (SELECT n FROM n0)),
-         |un AS (SELECT id1, id2 FROM p0
+         |un AS MATERIALIZED (SELECT id1, id2 FROM p0
          |       UNION ALL SELECT id1, id2 FROM dd),
-         |edges AS (SELECT id1 AS src, id2 AS dst FROM un
+         |edges AS MATERIALIZED (SELECT id1 AS src, id2 AS dst FROM un
          |          UNION SELECT id2, id1 FROM un),
-         |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-         |nodesv AS (SELECT DISTINCT src AS node FROM edges),
-         |nn AS (SELECT count(*) AS n_nodes FROM nodesv),
-         |pr0 AS (SELECT node, 1000000000000 // (SELECT n_nodes FROM nn) AS pr
-         |        FROM nodesv),
-         |$iterCtes
+         |deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM edges GROUP BY src),
+         |nodesv AS MATERIALIZED (SELECT DISTINCT src AS node FROM edges),
+         |${rankRecurrenceSql(5, seeds = None)}
          |SELECT node, pr FROM pr5
          |ORDER BY pr DESC, node LIMIT 50""".stripMargin
     },
@@ -4657,52 +4500,22 @@ object SparkEntry {
     // slice is the multiplicative hash (id1*48271 + id2*16807) % 101
     // — DuckDB replays the exact integer hash split from scratch
     "graph_pagerank_delta_rand" -> {
-      val hammingTerms = (1 to 16).map(i =>
-        s"CASE WHEN substr(sh1, $i, 1) = substr(sh2, $i, 1) THEN 0 ELSE 1 END")
-        .mkString(" + ")
-      val iterCtes = (1 to 5).map { i =>
-        s"""pr$i AS (
-           |  SELECT n.node,
-           |    (1000000000000 * 15) // 100 // (SELECT n_nodes FROM nn) +
-           |    (85 * coalesce(c.s, CAST(0 AS BIGINT))) // 100 AS pr
-           |  FROM nodesv n LEFT JOIN (
-           |    SELECT e.dst AS node, CAST(sum(p.pr // dg.deg) AS BIGINT) AS s
-           |    FROM edges e
-           |      JOIN pr${i - 1} p ON p.node = e.src
-           |      JOIN deg dg ON dg.src = e.src
-           |    GROUP BY e.dst) c ON c.node = n.node)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $SimhashSql,
-         |plv AS (SELECT CASE WHEN count(*) >= 320000 THEN 10
-         |                    WHEN count(*) >= 20000 THEN 9
-         |                    ELSE 8 END AS plen FROM documents),
-         |pre AS (SELECT doc_id, simhash16,
-         |          substr(simhash16, 1, (SELECT plen FROM plv)) AS prefix
-         |        FROM sim),
-         |prs AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2,
-         |         a.simhash16 AS sh1, b.simhash16 AS sh2
-         |  FROM pre a JOIN pre b
-         |    ON a.prefix = b.prefix AND a.doc_id < b.doc_id),
-         |ed0 AS (SELECT id1, id2 FROM prs WHERE $hammingTerms <= 3),
+      s"""WITH $SimPairsSql,
          |d0 AS (SELECT id1, id2 FROM ed0
          |       WHERE (id1 * 48271 + id2 * 16807) % 101 = 0),
-         |p0 AS (SELECT id1, id2 FROM ed0
+         |p0 AS MATERIALIZED (SELECT id1, id2 FROM ed0
          |       WHERE (id1 * 48271 + id2 * 16807) % 101 <> 0),
-         |n0 AS (SELECT id1 AS n FROM p0 UNION SELECT id2 FROM p0),
+         |n0 AS MATERIALIZED (SELECT id1 AS n FROM p0 UNION SELECT id2 FROM p0),
          |dd AS (SELECT id1, id2 FROM d0
          |       WHERE id1 IN (SELECT n FROM n0)
          |         AND id2 IN (SELECT n FROM n0)),
-         |un AS (SELECT id1, id2 FROM p0
+         |un AS MATERIALIZED (SELECT id1, id2 FROM p0
          |       UNION ALL SELECT id1, id2 FROM dd),
-         |edges AS (SELECT id1 AS src, id2 AS dst FROM un
+         |edges AS MATERIALIZED (SELECT id1 AS src, id2 AS dst FROM un
          |          UNION SELECT id2, id1 FROM un),
-         |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-         |nodesv AS (SELECT DISTINCT src AS node FROM edges),
-         |nn AS (SELECT count(*) AS n_nodes FROM nodesv),
-         |pr0 AS (SELECT node, 1000000000000 // (SELECT n_nodes FROM nn) AS pr
-         |        FROM nodesv),
-         |$iterCtes
+         |deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM edges GROUP BY src),
+         |nodesv AS MATERIALIZED (SELECT DISTINCT src AS node FROM edges),
+         |${rankRecurrenceSql(5, seeds = None)}
          |SELECT node, pr FROM pr5
          |ORDER BY pr DESC, node LIMIT 50""".stripMargin
     },
@@ -4714,55 +4527,20 @@ object SparkEntry {
     // prior ∪ delta — blind to the trajectory, the ball, and the
     // fold's seed-consistency check
     "graph_ppr_delta" -> {
-      val hammingTerms = (1 to 16).map(i =>
-        s"CASE WHEN substr(sh1, $i, 1) = substr(sh2, $i, 1) THEN 0 ELSE 1 END")
-        .mkString(" + ")
-      val iterCtes = (1 to 5).map { i =>
-        s"""pr$i AS (
-           |  SELECT t.node,
-           |    (15 * t.tele) // 100 +
-           |    (85 * coalesce(c.s, CAST(0 AS BIGINT))) // 100 AS pr
-           |  FROM tele t LEFT JOIN (
-           |    SELECT e.dst AS node, CAST(sum(p.pr // dg.deg) AS BIGINT) AS s
-           |    FROM edges e
-           |      JOIN pr${i - 1} p ON p.node = e.src
-           |      JOIN deg dg ON dg.src = e.src
-           |    GROUP BY e.dst) c ON c.node = t.node)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $SimhashSql,
-         |plv AS (SELECT CASE WHEN count(*) >= 320000 THEN 10
-         |                    WHEN count(*) >= 20000 THEN 9
-         |                    ELSE 8 END AS plen FROM documents),
-         |pre AS (SELECT doc_id, simhash16,
-         |          substr(simhash16, 1, (SELECT plen FROM plv)) AS prefix
-         |        FROM sim),
-         |prs AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2,
-         |         a.simhash16 AS sh1, b.simhash16 AS sh2
-         |  FROM pre a JOIN pre b
-         |    ON a.prefix = b.prefix AND a.doc_id < b.doc_id),
-         |ed0 AS (SELECT id1, id2 FROM prs WHERE $hammingTerms <= 3),
+      s"""WITH $SimPairsSql,
          |d0 AS (SELECT id1, id2 FROM ed0 WHERE (id1 + id2) % 101 = 0),
-         |p0 AS (SELECT id1, id2 FROM ed0 WHERE (id1 + id2) % 101 <> 0),
-         |n0 AS (SELECT id1 AS n FROM p0 UNION SELECT id2 FROM p0),
+         |p0 AS MATERIALIZED (SELECT id1, id2 FROM ed0 WHERE (id1 + id2) % 101 <> 0),
+         |n0 AS MATERIALIZED (SELECT id1 AS n FROM p0 UNION SELECT id2 FROM p0),
          |dd AS (SELECT id1, id2 FROM d0
          |       WHERE id1 IN (SELECT n FROM n0)
          |         AND id2 IN (SELECT n FROM n0)),
-         |un AS (SELECT id1, id2 FROM p0
+         |un AS MATERIALIZED (SELECT id1, id2 FROM p0
          |       UNION ALL SELECT id1, id2 FROM dd),
-         |edges AS (SELECT id1 AS src, id2 AS dst FROM un
+         |edges AS MATERIALIZED (SELECT id1 AS src, id2 AS dst FROM un
          |          UNION SELECT id2, id1 FROM un),
-         |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-         |nodesv AS (SELECT DISTINCT src AS node FROM edges),
-         |seedsv AS (SELECT node FROM nodesv WHERE node % 7 = 0),
-         |ns AS (SELECT count(*) AS n_seeds FROM seedsv),
-         |tele AS (SELECT n.node,
-         |           CASE WHEN s.node IS NOT NULL
-         |             THEN 1000000000000 // (SELECT n_seeds FROM ns)
-         |             ELSE CAST(0 AS BIGINT) END AS tele
-         |         FROM nodesv n LEFT JOIN seedsv s ON s.node = n.node),
-         |pr0 AS (SELECT node, tele AS pr FROM tele),
-         |$iterCtes
+         |deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM edges GROUP BY src),
+         |nodesv AS MATERIALIZED (SELECT DISTINCT src AS node FROM edges),
+         |${rankRecurrenceSql(5, seeds = Some("node % 7 = 0"))}
          |SELECT node, pr FROM pr5
          |ORDER BY pr DESC, node LIMIT 50""".stripMargin
     },
@@ -4774,45 +4552,15 @@ object SparkEntry {
     // operator's node-universe law. Blind to the trajectory, ball,
     // and branch machinery.
     "graph_pagerank_delete" -> {
-      val hammingTerms = (1 to 16).map(i =>
-        s"CASE WHEN substr(sh1, $i, 1) = substr(sh2, $i, 1) THEN 0 ELSE 1 END")
-        .mkString(" + ")
-      val iterCtes = (1 to 5).map { i =>
-        s"""pr$i AS (
-           |  SELECT n.node,
-           |    (1000000000000 * 15) // 100 // (SELECT n_nodes FROM nn) +
-           |    (85 * coalesce(c.s, CAST(0 AS BIGINT))) // 100 AS pr
-           |  FROM nodesv n LEFT JOIN (
-           |    SELECT e.dst AS node, CAST(sum(p.pr // dg.deg) AS BIGINT) AS s
-           |    FROM edges e
-           |      JOIN pr${i - 1} p ON p.node = e.src
-           |      JOIN deg dg ON dg.src = e.src
-           |    GROUP BY e.dst) c ON c.node = n.node)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $SimhashSql,
-         |plv AS (SELECT CASE WHEN count(*) >= 320000 THEN 10
-         |                    WHEN count(*) >= 20000 THEN 9
-         |                    ELSE 8 END AS plen FROM documents),
-         |pre AS (SELECT doc_id, simhash16,
-         |          substr(simhash16, 1, (SELECT plen FROM plv)) AS prefix
-         |        FROM sim),
-         |prs AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2,
-         |         a.simhash16 AS sh1, b.simhash16 AS sh2
-         |  FROM pre a JOIN pre b
-         |    ON a.prefix = b.prefix AND a.doc_id < b.doc_id),
-         |ed0 AS (SELECT id1, id2 FROM prs WHERE $hammingTerms <= 3),
-         |surv AS (SELECT id1, id2 FROM ed0 WHERE (id1 + id2) % 13 <> 0),
-         |prioredges AS (SELECT id1 AS src, id2 AS dst FROM ed0
-         |               UNION SELECT id2, id1 FROM ed0),
-         |nodesv AS (SELECT DISTINCT src AS node FROM prioredges),
-         |nn AS (SELECT count(*) AS n_nodes FROM nodesv),
-         |edges AS (SELECT id1 AS src, id2 AS dst FROM surv
+      s"""WITH $SimPairsSql,
+         |surv AS MATERIALIZED (
+         |  SELECT id1, id2 FROM ed0 WHERE (id1 + id2) % 13 <> 0),
+         |edges AS MATERIALIZED (SELECT id1 AS src, id2 AS dst FROM surv
          |          UNION SELECT id2, id1 FROM surv),
-         |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-         |pr0 AS (SELECT node, 1000000000000 // (SELECT n_nodes FROM nn) AS pr
-         |        FROM nodesv),
-         |$iterCtes
+         |deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM edges GROUP BY src),
+         |nodesv AS MATERIALIZED (SELECT DISTINCT node FROM (
+         |  SELECT id1 AS node FROM ed0 UNION ALL SELECT id2 FROM ed0)),
+         |${rankRecurrenceSql(5, seeds = None)}
          |SELECT node, pr FROM pr5
          |ORDER BY pr DESC, node LIMIT 50""".stripMargin
     },
@@ -4822,50 +4570,15 @@ object SparkEntry {
     // vanish from edges/deg, so the left join decays it to zero, a
     // stranded seed to its damped teleport share
     "graph_ppr_delete" -> {
-      val hammingTerms = (1 to 16).map(i =>
-        s"CASE WHEN substr(sh1, $i, 1) = substr(sh2, $i, 1) THEN 0 ELSE 1 END")
-        .mkString(" + ")
-      val iterCtes = (1 to 5).map { i =>
-        s"""pr$i AS (
-           |  SELECT t.node,
-           |    (15 * t.tele) // 100 +
-           |    (85 * coalesce(c.s, CAST(0 AS BIGINT))) // 100 AS pr
-           |  FROM tele t LEFT JOIN (
-           |    SELECT e.dst AS node, CAST(sum(p.pr // dg.deg) AS BIGINT) AS s
-           |    FROM edges e
-           |      JOIN pr${i - 1} p ON p.node = e.src
-           |      JOIN deg dg ON dg.src = e.src
-           |    GROUP BY e.dst) c ON c.node = t.node)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $SimhashSql,
-         |plv AS (SELECT CASE WHEN count(*) >= 320000 THEN 10
-         |                    WHEN count(*) >= 20000 THEN 9
-         |                    ELSE 8 END AS plen FROM documents),
-         |pre AS (SELECT doc_id, simhash16,
-         |          substr(simhash16, 1, (SELECT plen FROM plv)) AS prefix
-         |        FROM sim),
-         |prs AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2,
-         |         a.simhash16 AS sh1, b.simhash16 AS sh2
-         |  FROM pre a JOIN pre b
-         |    ON a.prefix = b.prefix AND a.doc_id < b.doc_id),
-         |ed0 AS (SELECT id1, id2 FROM prs WHERE $hammingTerms <= 3),
-         |surv AS (SELECT id1, id2 FROM ed0 WHERE (id1 + id2) % 13 <> 0),
-         |prioredges AS (SELECT id1 AS src, id2 AS dst FROM ed0
-         |               UNION SELECT id2, id1 FROM ed0),
-         |nodesv AS (SELECT DISTINCT src AS node FROM prioredges),
-         |seedsv AS (SELECT node FROM nodesv WHERE node % 7 = 0),
-         |ns AS (SELECT count(*) AS n_seeds FROM seedsv),
-         |tele AS (SELECT n.node,
-         |           CASE WHEN s.node IS NOT NULL
-         |             THEN 1000000000000 // (SELECT n_seeds FROM ns)
-         |             ELSE CAST(0 AS BIGINT) END AS tele
-         |         FROM nodesv n LEFT JOIN seedsv s ON s.node = n.node),
-         |edges AS (SELECT id1 AS src, id2 AS dst FROM surv
+      s"""WITH $SimPairsSql,
+         |surv AS MATERIALIZED (
+         |  SELECT id1, id2 FROM ed0 WHERE (id1 + id2) % 13 <> 0),
+         |edges AS MATERIALIZED (SELECT id1 AS src, id2 AS dst FROM surv
          |          UNION SELECT id2, id1 FROM surv),
-         |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-         |pr0 AS (SELECT node, tele AS pr FROM tele),
-         |$iterCtes
+         |deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM edges GROUP BY src),
+         |nodesv AS MATERIALIZED (SELECT DISTINCT node FROM (
+         |  SELECT id1 AS node FROM ed0 UNION ALL SELECT id2 FROM ed0)),
+         |${rankRecurrenceSql(5, seeds = Some("node % 7 = 0"))}
          |SELECT node, pr FROM pr5
          |ORDER BY pr DESC, node LIMIT 50""".stripMargin
     },
@@ -4874,47 +4587,12 @@ object SparkEntry {
     // %7 seed slice only — pr0 = tele, each step mixes (15·tele)//100
     // with the damped in-sum
     "graph_ppr" -> {
-      val hammingTerms = (1 to 16).map(i =>
-        s"CASE WHEN substr(sh1, $i, 1) = substr(sh2, $i, 1) THEN 0 ELSE 1 END")
-        .mkString(" + ")
-      val iterCtes = (1 to 5).map { i =>
-        s"""pr$i AS (
-           |  SELECT t.node,
-           |    (15 * t.tele) // 100 +
-           |    (85 * coalesce(c.s, CAST(0 AS BIGINT))) // 100 AS pr
-           |  FROM tele t LEFT JOIN (
-           |    SELECT e.dst AS node, CAST(sum(p.pr // dg.deg) AS BIGINT) AS s
-           |    FROM edges e
-           |      JOIN pr${i - 1} p ON p.node = e.src
-           |      JOIN deg dg ON dg.src = e.src
-           |    GROUP BY e.dst) c ON c.node = t.node)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $SimhashSql,
-         |plv AS (SELECT CASE WHEN count(*) >= 320000 THEN 10
-         |                    WHEN count(*) >= 20000 THEN 9
-         |                    ELSE 8 END AS plen FROM documents),
-         |pre AS (SELECT doc_id, simhash16,
-         |          substr(simhash16, 1, (SELECT plen FROM plv)) AS prefix
-         |        FROM sim),
-         |prs AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2,
-         |         a.simhash16 AS sh1, b.simhash16 AS sh2
-         |  FROM pre a JOIN pre b
-         |    ON a.prefix = b.prefix AND a.doc_id < b.doc_id),
-         |ed0 AS (SELECT id1, id2 FROM prs WHERE $hammingTerms <= 3),
-         |edges AS (SELECT id1 AS src, id2 AS dst FROM ed0
+      s"""WITH $SimPairsSql,
+         |edges AS MATERIALIZED (SELECT id1 AS src, id2 AS dst FROM ed0
          |          UNION SELECT id2, id1 FROM ed0),
-         |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-         |nodesv AS (SELECT DISTINCT src AS node FROM edges),
-         |seedsv AS (SELECT node FROM nodesv WHERE node % 7 = 0),
-         |ns AS (SELECT count(*) AS n_seeds FROM seedsv),
-         |tele AS (SELECT n.node,
-         |           CASE WHEN s.node IS NOT NULL
-         |             THEN 1000000000000 // (SELECT n_seeds FROM ns)
-         |             ELSE CAST(0 AS BIGINT) END AS tele
-         |         FROM nodesv n LEFT JOIN seedsv s ON s.node = n.node),
-         |pr0 AS (SELECT node, tele AS pr FROM tele),
-         |$iterCtes
+         |deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM edges GROUP BY src),
+         |nodesv AS MATERIALIZED (SELECT DISTINCT src AS node FROM edges),
+         |${rankRecurrenceSql(5, seeds = Some("node % 7 = 0"))}
          |SELECT node, pr FROM pr5
          |ORDER BY pr DESC, node LIMIT 50""".stripMargin
     },
@@ -5693,9 +5371,6 @@ object SparkEntry {
         .mkString(", ")
       val bits = (for (k <- 0 to 3; i <- 1 to 16) yield
         s"CASE WHEN b${k}_$i > 0 THEN '1' ELSE '0' END").mkString(" || ")
-      val hammingTerms = (1 to 64).map(i =>
-        s"CASE WHEN substr(sh1, $i, 1) = substr(sh2, $i, 1) THEN 0 ELSE 1 END")
-        .mkString(" + ")
       s"""WITH fr AS (
          |  SELECT doc_id,
          |    CASE WHEN doc_id % 2 = 0 THEN 'image/png' ELSE 'audio/wav' END
@@ -5719,7 +5394,8 @@ object SparkEntry {
          |  FROM bd a JOIN bd b
          |    ON a.media_type = b.media_type AND a.band = b.band
          |   AND a.bits = b.bits AND a.doc_id < b.doc_id),
-         |ham AS (SELECT media_type, id1, id2, $hammingTerms AS hamming
+         |ham AS (SELECT media_type, id1, id2,
+         |          ${hammingSql("sh1", "sh2", 64)} AS hamming
          |        FROM pairs)
          |SELECT media_type, id1, id2, hamming FROM ham WHERE hamming <= 3
          |ORDER BY media_type, id1, id2""".stripMargin
