@@ -2,34 +2,25 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Pluggable ingest sources for the wire-format event stream
-  * (SURVEY S5: the reference consumes Kinesis via `GetRecords`; tests
-  * use replayable local sources).
-  *
-  * Every source yields a streaming DataFrame with a single string
-  * `value` column — one JSON event per record (functions.js:211) —
-  * which `MouseStream.parse` turns into typed events. Swapping
-  * sources never touches the pipeline.
-  */
-trait EventSource {
-  def load(spark: SparkSession): DataFrame
-}
+// Local sources for the wire-format event stream (SURVEY S5: the
+// reference consumes Kinesis via `GetRecords`; the shard-store stream
+// is `format("kinesis-sim")`). Each yields a streaming DataFrame with
+// one string `value` column — one JSON event per record
+// (functions.js:211) — which `MouseStream.parse` turns into typed events.
 
 /** Replayable directory of JSON-lines files — the offline stand-in
   * for a stream; also the backfill path (the same pipeline replays
   * history by pointing at the archive). */
-final class FileJsonSource(dir: String, maxFilesPerTrigger: Int = 10)
-    extends EventSource {
-  override def load(spark: SparkSession): DataFrame =
+final class FileJsonSource(dir: String, maxFilesPerTrigger: Int = 10) {
+  def load(spark: SparkSession): DataFrame =
     spark.readStream
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .text(dir)
 }
 
-/** Synthetic load at a fixed rate (used by StreamBench). */
-final class RateJsonSource(eventsPerSec: Long, users: Int = 1000)
-    extends EventSource {
-  override def load(spark: SparkSession): DataFrame = {
+/** Synthetic load at a fixed rate (used by Demo). */
+final class RateJsonSource(eventsPerSec: Long, users: Int = 1000) {
+  def load(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.functions._
     spark.readStream.format("rate")
       .option("rowsPerSecond", eventsPerSec.toString)
@@ -57,25 +48,5 @@ object KinesisRecords {
     records.select(
       col("data").cast("string").as("value"),
       col("partitionKey").as("partition_key"))
-  }
-}
-
-/** The production slot: a connector-backed stream (Kinesis/Kafka).
-  * The AWS connector jar is not present in this offline build, but
-  * the INTERFACE is exercised for real: `format("kinesis-sim")`
-  * ([[KinesisSimProvider]]) is a full DataSource V2
-  * `MicroBatchStream` over the simulated transport — shard-keyed
-  * sequence offsets, one InputPartition per shard, checkpoint
-  * replay, all spec-driven (KinesisSimSpec). Swapping to the network
-  * connector is a format-name + options change here; the record
-  * payload lands in `value` like every other source (for Kafka,
-  * `CAST(value AS STRING)`; partition key = user_id preserves the
-  * reference's per-key ordering). */
-final class ConnectorSource(format: String, options: Map[String, String])
-    extends EventSource {
-  override def load(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.functions._
-    spark.readStream.format(format).options(options).load()
-      .selectExpr("CAST(value AS STRING) AS value")
   }
 }

@@ -2,8 +2,6 @@ package graft.sources
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -18,13 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** A real DataSource V2 micro-batch connector over the simulated
   * Kinesis transport — `spark.readStream.format("kinesis-sim")
-  * .option("path", dir).option("shards", n).load()`.
-  *
-  * [[SimulatedKinesis.load]] consumes the shard files as plain file
-  * streams; this class instead implements the CONNECTOR interface a
-  * production Kinesis source implements ([[MicroBatchStream]] with
-  * shard-keyed offsets), so the swap to a network connector is a
-  * format-name change and nothing else:
+  * .option("path", dir).option("shards", n).load()`. It implements the
+  * CONNECTOR interface a production Kinesis source implements
+  * ([[MicroBatchStream]] with shard-keyed offsets), so the swap to a
+  * network connector is a format-name change and nothing else:
   *
   *  - **Offsets are per-shard sequence numbers** — exactly the
   *    checkpoint token Kinesis consumers carry. `latestOffset` lists
@@ -39,14 +34,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *    restart, `planInputPartitions(committed, latest)` re-reads
   *    exactly the uncommitted range — the spec drives this.
   *
-  * Record schema matches [[SimulatedKinesis.load]] (`data` binary,
-  * `partitionKey`, `sequenceNumber`, `shardId`), so every downstream
-  * pipeline stage runs unchanged on either entry point.
+  * Records carry `data` (binary), `partitionKey`, `sequenceNumber` and
+  * `shardId`, the connector record shape [[KinesisRecords.toWire]]
+  * projects onto the pipeline's wire contract.
   *
   * The same format is also a STREAMING SINK (`writeStream
   * .format("kinesis-sim")` with (`data` binary, `partitionKey`)
   * input): tasks buffer, the driver commits each epoch atomically
   * with an idempotence marker — see [[KinesisSimStreamingWrite]].
+  * Every read and write of the files goes through the shard store,
+  * [[SimulatedKinesis]].
   */
 class KinesisSimProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "kinesis-sim"
@@ -79,68 +76,6 @@ object KinesisSimProvider {
     StructField("partitionKey", StringType),
     StructField("sequenceNumber", StringType),
     StructField("shardId", StringType)))
-
-  /** One shard's batch files in sequence order (name order == write
-    * order — every writer zero-pads indices). The listing stream is
-    * closed eagerly: `Files.list` holds a directory descriptor until
-    * closed, and a long-running stream calls this every micro-batch. */
-  private[sources] def shardFiles(dir: String,
-                                  shard: Int): Seq[java.nio.file.Path] = {
-    val p = java.nio.file.Paths.get(dir, s"shard-$shard")
-    if (!java.nio.file.Files.isDirectory(p)) Seq.empty
-    else {
-      val st = java.nio.file.Files.list(p)
-      try st.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("batch-"))
-        .toSeq.sortBy(_.getFileName.toString)
-      finally st.close()
-    }
-  }
-
-  /** Records currently on disk for one shard, in sequence order —
-    * parses the sim's fixed one-line-per-record JSON layout. */
-  private[sources] def shardLines(dir: String, shard: Int): Seq[String] =
-    shardFiles(dir, shard).flatMap(f =>
-      new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-        .split("\n").iterator.filter(_.nonEmpty))
-
-  /** Record count of one batch file WITHOUT materializing or splitting
-    * its contents: streams the bytes and counts non-empty lines. */
-  private[sources] def countRecords(f: java.nio.file.Path): Long = {
-    val in = java.nio.file.Files.newInputStream(f)
-    try {
-      val buf = new Array[Byte](64 * 1024)
-      var n = 0L
-      var lineHasContent = false
-      var read = in.read(buf)
-      while (read > 0) {
-        var i = 0
-        while (i < read) {
-          if (buf(i) == '\n') {
-            if (lineHasContent) n += 1
-            lineHasContent = false
-          } else lineHasContent = true
-          i += 1
-        }
-        read = in.read(buf)
-      }
-      if (lineHasContent) n + 1 else n
-    } finally in.close()
-  }
-
-  // partitionKey admits JSON escape sequences (writers escape via
-  // SimulatedKinesis.jsonEscape); sequenceNumber and data never need them
-  private val Line =
-    """\{"sequenceNumber":"([^"]*)","partitionKey":"((?:[^"\\]|\\.)*)","data":"([^"]*)"\}""".r
-
-  private[sources] def parse(line: String): (String, String, Array[Byte]) =
-    line match {
-      case Line(sn, pk, b64) =>
-        (sn, SimulatedKinesis.jsonUnescape(pk),
-          java.util.Base64.getDecoder.decode(b64))
-      case other =>
-        throw new IllegalStateException(s"malformed sim record: $other")
-    }
 }
 
 /** The consumer's transport seam: every shard's record count in one
@@ -158,53 +93,10 @@ private[sources] sealed trait SimTransport extends Serializable {
 
 private[sources] case class FileTransport(dir: String) extends SimTransport {
   override def id: String = dir
-  // Per-file record counts keyed by (path, size, mtime): batch files
-  // are append-created (never rewritten in place), so a file whose
-  // size+mtime are unchanged has an unchanged count. recordCounts runs
-  // every micro-batch; without this cache it would re-read every byte
-  // ever written to the stream, per batch, forever.
-  @transient private lazy val countCache =
-    scala.collection.mutable.HashMap.empty[(String, Long, Long), Long]
-
-  private def cachedCount(f: java.nio.file.Path): Long = {
-    val key = (f.toString,
-      java.nio.file.Files.size(f),
-      java.nio.file.Files.getLastModifiedTime(f).toMillis)
-    countCache.getOrElseUpdate(key, KinesisSimProvider.countRecords(f))
-  }
-
   override def recordCounts(nShards: Int): Map[Int, Long] =
-    (0 until nShards).map { s =>
-      s -> KinesisSimProvider.shardFiles(dir, s).map(cachedCount).sum
-    }.toMap
-
-  override def lines(shard: Int, from: Long, until: Long): Iterator[String] = {
-    // SEEK, don't skip (the fix ShardService's /records got in round
-    // 8, applied to the file transport too): cumulative cached
-    // per-file counts jump straight to the first file containing
-    // `from`, and files load LAZILY one at a time — a range read
-    // touches only the files it covers, so a long-running stream's
-    // per-batch tail reads stay O(batch), not O(history). Positioning
-    // is Long-safe throughout (slice(Int, Int) would silently
-    // truncate a shard past 2^31 records).
-    val files = KinesisSimProvider.shardFiles(dir, shard)
-    var base = 0L
-    var idx = 0
-    while (idx < files.length && base + cachedCount(files(idx)) <= from) {
-      base += cachedCount(files(idx)); idx += 1
-    }
-    val it = files.iterator.drop(idx).flatMap { f =>
-      new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-        .split("\n").iterator.filter(_.nonEmpty)
-    }
-    var skipped = base
-    while (skipped < from && it.hasNext) { it.next(); skipped += 1 }
-    new Iterator[String] {
-      private var remaining = until - from
-      override def hasNext: Boolean = remaining > 0 && it.hasNext
-      override def next(): String = { remaining -= 1; it.next() }
-    }
-  }
+    SimulatedKinesis.counts(dir, nShards)
+  override def lines(shard: Int, from: Long, until: Long): Iterator[String] =
+    SimulatedKinesis.lines(dir, shard, from, until)
 }
 
 private[sources] case class HttpTransport(endpoint: String) extends SimTransport {
@@ -472,9 +364,9 @@ private[sources] case class SimRecords(
   * would silently skip its early batches as "already committed".
   * Resuming the same query from its checkpoint is the supported
   * restart path; a new lineage gets a new output path.
-  * PutRecords semantics (key→shard hash, batch files, monotone
-  * mtimes, zero-padded name order) match [[SimulatedKinesis
-  * .ShardedProducer]], so either entry point feeds the same readers. */
+  * The files themselves are appended by the store's one writer, a
+  * [[SimulatedKinesis.ShardedProducer]] opened per epoch commit, so
+  * sequences continue whatever wrote the shard before. */
 private[sources] class KinesisSimStreamingWrite(path: String, nShards: Int,
     dataIdx: Int, pkIdx: Int) extends StreamingWrite {
 
@@ -492,41 +384,13 @@ private[sources] class KinesisSimStreamingWrite(path: String, nShards: Int,
     java.nio.file.Files.createDirectories(marker.getParent)
     val recs = messages.collect { case m: SimRecords => m }
       .sortBy(_.partitionId).toSeq.flatMap(_.records)
-    recs.groupBy { case (_, pk) =>
-        SimulatedKinesis.shardFor(pk, nShards)
-      }
+    val store = new SimulatedKinesis.ShardedProducer(path, nShards)
+    recs.groupBy { case (_, pk) => SimulatedKinesis.shardFor(pk, nShards) }
       .toSeq.sortBy(_._1)
       .foreach { case (shard, rs) =>
-        val dirP = java.nio.file.Paths.get(path, s"shard-$shard")
-        java.nio.file.Files.createDirectories(dirP)
-        val existingFiles = KinesisSimProvider.shardFiles(path, shard)
         // retried commit after a crash mid-loop: this shard already
         // holds this epoch's file — appending again would duplicate
-        if (existingFiles.exists(
-            _.getFileName.toString.endsWith(s"-epoch-$epochId.json")))
-          ()
-        else {
-          var seq = existingFiles.map(KinesisSimProvider.countRecords).sum
-          val batchIdx = existingFiles.size
-          val lastMtime = (0L +: existingFiles.map(f =>
-            java.nio.file.Files.getLastModifiedTime(f).toMillis)).max
-          val lines = rs.map { case (data, pk) =>
-            val b64 = java.util.Base64.getEncoder.encodeToString(data)
-            val l =
-              s"""{"sequenceNumber":"$seq","partitionKey":"${SimulatedKinesis.jsonEscape(pk)}","data":"$b64"}"""
-            seq += 1
-            l
-          }
-          val tmp = dirP.resolve(f".tmp-epoch-$epochId%d")
-          java.nio.file.Files.write(tmp,
-            (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-          java.nio.file.Files.setLastModifiedTime(tmp,
-            java.nio.file.attribute.FileTime.fromMillis(
-              math.max(lastMtime + 1000L, System.currentTimeMillis())))
-          java.nio.file.Files.move(tmp,
-            dirP.resolve(f"batch-$batchIdx%06d-epoch-$epochId%d.json"),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        }
+        if (!store.holdsEpoch(shard, epochId)) store.append(shard, rs, Some(epochId))
       }
     java.nio.file.Files.write(marker, Array.emptyByteArray)
   }
@@ -560,7 +424,7 @@ private[sources] class KinesisSimDataWriter(partitionId: Int,
   * of a GetRecords iterator positioned at a sequence number. */
 private[sources] class KinesisSimReader(p: KinesisSimPartition)
     extends PartitionReader[InternalRow] {
-  // range slicing lives in the transport (file skip-iterate or HTTP
+  // range slicing lives in the transport (store seek or HTTP
   // range fetch); either way the reader sees the same line format
   private val lines: Iterator[String] =
     p.transport.lines(p.shard, p.from, p.until)
@@ -569,12 +433,12 @@ private[sources] class KinesisSimReader(p: KinesisSimPartition)
   override def next(): Boolean =
     if (!lines.hasNext) false
     else {
-      val (sn, pk, data) = KinesisSimProvider.parse(lines.next())
+      val (sn, pk, data) = SimulatedKinesis.decode(lines.next())
       current = InternalRow(
         data,
         UTF8String.fromString(pk),
         UTF8String.fromString(sn),
-        UTF8String.fromString(s"shard-${p.shard}"))
+        UTF8String.fromString(SimulatedKinesis.shardId(p.shard)))
       true
     }
 

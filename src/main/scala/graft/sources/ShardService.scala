@@ -25,14 +25,15 @@ import graft.serve.HttpServers
   *    file consumer reads, so either transport feeds the same parser.
   *
   * Offsets are record counts (the transport's sequence-number
-  * contract); range reads are half-open [from, until). The service is
-  * read-only over the store directory; producers keep writing through
-  * [[SimulatedKinesis.ShardedProducer]] or the V2 sink, and new
-  * records become visible to `/latest` immediately — the poll loop a
-  * real consumer runs.
+  * contract); range reads are half-open [from, until). Counts and
+  * ranges come from the shard store ([[SimulatedKinesis]]), so the
+  * service and a file consumer agree on sequence numbers by
+  * construction, and new records become visible to `/latest`
+  * immediately — the poll loop a real consumer runs.
   */
 object ShardService {
   import HttpServers.{errorBody, respond}
+  import SimulatedKinesis.{jsonEscape, jsonUnescape}
 
   private val LatestPath = "/latest/([0-9]+)".r
   private val RecordsPath = "/records/([0-9]+)".r
@@ -47,9 +48,12 @@ object ShardService {
     *
     * The PRODUCER half — `POST /records` with a newline-delimited
     * `{"partitionKey":…,"data":<b64>}` body — appends through ONE
-    * server-side [[SimulatedKinesis.ShardedProducer]], which is what
-    * makes sequence numbers server-assigned (the managed-service
-    * contract; a client never picks its own). An optional
+    * server-side [[SimulatedKinesis.ShardedProducer]], opened here for
+    * the server's lifetime, which is what makes sequence numbers
+    * server-assigned (the managed-service contract; a client never
+    * picks its own). The producer continues the store from disk, so a
+    * restarted server on the same directory keeps every acknowledged
+    * record; while it runs it is the store's one writer. An optional
     * `X-Idempotency-Key` header makes producer retries safe: a key
     * the server has seen is acknowledged with `"duplicate":true` and
     * writes nothing — the dedup token the real PutRecords API lacks
@@ -78,13 +82,6 @@ object ShardService {
   // base64 and needs none
   private val PostLine =
     """\{"partitionKey":"((?:[^"\\]|\\.)*)","data":"([^"]*)"\}""".r
-
-  // partitionKey escaping is a property of the record line format and
-  // lives with the store ([[SimulatedKinesis.jsonEscape]]); the wire
-  // uses the identical rules so either transport feeds the same parser
-  private def jsonEscape(s: String): String = SimulatedKinesis.jsonEscape(s)
-  private def jsonUnescape(s: String): String =
-    SimulatedKinesis.jsonUnescape(s)
 
   private def handle(dir: String, nShards: Int,
                      producer: SimulatedKinesis.ShardedProducer,
@@ -127,11 +124,11 @@ object ShardService {
           }
         case ("GET", "/latest") =>
           respond(ex, 200,
-            ShardOffsets((0 until nShards).map(s => s -> count(dir, s)).toMap).json)
+            ShardOffsets(SimulatedKinesis.counts(dir, nShards)).json)
         case ("GET", LatestPath(shard)) =>
           val s = shard.toInt
           if (s >= nShards) respond(ex, 404, """{"error":"no such shard"}""")
-          else respond(ex, 200, s"""{"next":${count(dir, s)}}""")
+          else respond(ex, 200, s"""{"next":${SimulatedKinesis.count(dir, s)}}""")
         case ("GET", RecordsPath(shard)) =>
           val s = shard.toInt
           if (s >= nShards) respond(ex, 404, """{"error":"no such shard"}""")
@@ -143,27 +140,9 @@ object ShardService {
             // server never materializes an unbounded response; clients
             // paginate (ShardService.Client.records does, transparently)
             val capped = math.min(until, from + MaxRecordsPerCall)
-            // SEEK, don't skip: cumulative per-file counts (served by
-            // the same cache /latest uses) jump straight to the first
-            // file containing `from`. A paginated full replay of an
-            // n-record shard is then O(n) total line reads instead of
-            // O(n²/pageSize) — the catch-up case this endpoint is for.
-            val files = KinesisSimProvider.shardFiles(dir, s)
-            var base = 0L
-            var idx = 0
-            while (idx < files.length &&
-                   base + cachedCount(files(idx)) <= from) {
-              base += cachedCount(files(idx)); idx += 1
-            }
-            val it = files.drop(idx).iterator.flatMap(fileLines)
-            var skipped = base
-            while (skipped < from && it.hasNext) { it.next(); skipped += 1 }
             val sb = new StringBuilder
-            var remaining = capped - from
-            while (remaining > 0 && it.hasNext) {
-              sb.append(it.next()).append('\n')
-              remaining -= 1
-            }
+            SimulatedKinesis.lines(dir, s, from, capped)
+              .foreach(sb.append(_).append('\n'))
             respond(ex, 200, sb.toString, "application/x-ndjson")
           }
         case ("GET", _) => respond(ex, 404, """{"error":"not found"}""")
@@ -175,34 +154,6 @@ object ShardService {
       case e: IllegalArgumentException => respond(ex, 400, errorBody(e))
       case e: Exception => respond(ex, 500, errorBody(e))
     }
-
-  // counts reuse the provider's file enumeration + record counter —
-  // the service and a file consumer agree on sequence numbers by
-  // construction
-  private val countCache =
-    scala.collection.mutable.HashMap.empty[(String, Long, Long), Long]
-
-  /** Record count of one batch file, cached by (path, size, mtime) —
-    * batch files are append-immutable, so the key invalidates exactly
-    * when a file changes. Serves `/latest` totals AND the `/records`
-    * seek. */
-  private def cachedCount(f: java.nio.file.Path): Long = {
-    val key = (f.toString,
-      java.nio.file.Files.size(f),
-      java.nio.file.Files.getLastModifiedTime(f).toMillis)
-    countCache.synchronized {
-      countCache.getOrElseUpdate(key, KinesisSimProvider.countRecords(f))
-    }
-  }
-
-  private def count(dir: String, shard: Int): Long =
-    KinesisSimProvider.shardFiles(dir, shard).map(cachedCount).sum
-
-  /** One batch file's records in sequence order (the per-file slice of
-    * KinesisSimProvider.shardLines). */
-  private def fileLines(f: java.nio.file.Path): Iterator[String] =
-    new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      .split("\n").iterator.filter(_.nonEmpty)
 
   /** Driver/executor-side client half (plain HttpURLConnection — no
     * dependencies, serializable by construction since only the

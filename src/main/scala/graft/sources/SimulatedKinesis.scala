@@ -1,15 +1,24 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.BasicFileAttributes
 
-/** File-backed simulation of a Kinesis stream, faithful to the
-  * producer/consumer contract the reference exercises
+import scala.jdk.CollectionConverters._
+
+/** The shard store: a file-backed simulation of a Kinesis stream,
+  * faithful to the producer/consumer contract the reference exercises
   * (functions.js:206-232: `PutRecords` of `{Data, PartitionKey}`
   * batches; the consumer sees `data/partitionKey/sequenceNumber` per
   * record) — the honest stand-in for SURVEY S4/S5 in an offline build
-  * where no AWS endpoint or connector jar exists.
+  * where no AWS endpoint or connector jar exists. This object is the
+  * only code that knows the on-disk format; the `kinesis-sim` source
+  * and sink ([[KinesisSimProvider]]) and [[ShardService]] go through it.
+  *
+  * Layout: `dir/shard-N/batch-%06d.json` (or `batch-%06d-epoch-E.json`
+  * for a sink epoch), one JSON record line per record. File index order
+  * is write order, and a record's sequence number is its line ordinal
+  * across its shard's files, dense from 0.
   *
   * Semantics simulated, not hand-waved:
   *  - **Sharding**: a record lands on shard `hash(partitionKey) mod
@@ -20,20 +29,16 @@ import org.apache.spark.sql.types._
   *    staying under); [[ShardedProducer.putRecords]] enforces it by
   *    splitting, like the AWS SDK caller must.
   *  - **Per-shard sequence numbers**: strictly increasing longs
-  *    assigned at write, never reused across flushes — the consumer
-  *    can (and the spec does) assert per-key arrival order by them.
-  *  - **GetRecords batching**: each flush becomes one JSON-lines file
-  *    under `shard-N/`; the consumer reads each shard directory as a
-  *    file stream with `maxFilesPerTrigger=1`, so a micro-batch
-  *    consumes at most one GetRecords-worth of data per shard, oldest
-  *    first — the iterator semantics of a real shard reader.
+  *    assigned at write, never reused across flushes, producers or
+  *    restarts — the consumer can (and the specs do) assert per-key
+  *    arrival order by them.
   *
-  * The consumer output schema matches [[KinesisRecords.toWire]]'s
-  * input contract (`data: binary`, `partitionKey`, `sequenceNumber`),
-  * so the full ingest pipeline — wire projection, JSON parse, window
-  * aggregation, upsert sink — runs unchanged against the simulation,
-  * and swapping in a real connector stream is a one-line change in
-  * [[ConnectorSource]].
+  * CONTRACT: one writer at a time per store. A [[ShardedProducer]]
+  * reads each shard's next sequence and file index from disk when it
+  * is constructed and keeps them in memory, so two producers open on
+  * one directory at once would assign the same sequences. Readers may
+  * run concurrently with the writer: a batch file appears whole
+  * (write-to-temp + atomic move) or not at all.
   */
 object SimulatedKinesis {
 
@@ -45,17 +50,18 @@ object SimulatedKinesis {
     * any fixed hash gives the property that matters — one key, one
     * shard. */
   def shardFor(partitionKey: String, nShards: Int): Int = {
-    val h = java.util.Arrays.hashCode(partitionKey.getBytes("UTF-8"))
+    val h = java.util.Arrays.hashCode(partitionKey.getBytes(UTF_8))
     math.floorMod(h, nShards)
   }
+
+  /** A shard's id: its directory name and the connector's `shardId`. */
+  def shardId(shard: Int): String = s"shard-$shard"
 
   /** Minimal JSON string escaping for the record line's partitionKey
     * field — quote, backslash, and control chars (as \uXXXX): exactly
     * the characters that would break the one-line-per-record framing
-    * or the quoted-field parse. Data needs none (base64). Every
-    * writer of the line format (this producer, the V2 sink, the HTTP
-    * producer endpoint) escapes with this; every parser unescapes
-    * with [[jsonUnescape]]. */
+    * or the quoted-field parse. Data needs none (base64). The HTTP
+    * producer wire ([[ShardService]]) escapes with the same rules. */
   private[sources] def jsonEscape(s: String): String = {
     val sb = new StringBuilder(s.length)
     s.foreach {
@@ -92,24 +98,138 @@ object SimulatedKinesis {
     sb.toString
   }
 
-  /** Producer half: accumulates `putRecords` calls into per-shard
-    * JSON-lines batch files under `dir/shard-N/`. Not thread-safe —
-    * one producer instance per simulated client, like one SDK client. */
+  /** One record line: compact JSON, no library needed; data is base64
+    * so the payload never fights the JSON escaping rules. */
+  private[sources] def encode(seq: Long, partitionKey: String,
+                              data: Array[Byte]): String = {
+    val b64 = java.util.Base64.getEncoder.encodeToString(data)
+    s"""{"sequenceNumber":"$seq","partitionKey":"${jsonEscape(partitionKey)}","data":"$b64"}"""
+  }
+
+  private val Line =
+    """\{"sequenceNumber":"([^"]*)","partitionKey":"((?:[^"\\]|\\.)*)","data":"([^"]*)"\}""".r
+
+  /** Inverse of [[encode]]: (sequenceNumber, partitionKey, data). */
+  private[sources] def decode(line: String): (String, String, Array[Byte]) =
+    line match {
+      case Line(sn, pk, b64) =>
+        (sn, jsonUnescape(pk), java.util.Base64.getDecoder.decode(b64))
+      case other =>
+        throw new IllegalStateException(s"malformed sim record: $other")
+    }
+
+  private def shardDir(dir: String, shard: Int): Path = Paths.get(dir, shardId(shard))
+
+  /** A batch file's index, the digits after `batch-`. */
+  private def fileIndex(f: Path): Long =
+    f.getFileName.toString.drop("batch-".length).takeWhile(_.isDigit).toLong
+
+  /** One shard's batch files in index order (== write order; numeric,
+    * so a shard past 999,999 files keeps its order). The listing
+    * stream is closed eagerly: `Files.list` holds a directory
+    * descriptor until closed, and a long-running stream calls this
+    * every micro-batch. Dot-prefixed temp files never match. */
+  private[sources] def files(dir: String, shard: Int): Seq[Path] = {
+    val p = shardDir(dir, shard)
+    if (!Files.isDirectory(p)) Seq.empty
+    else {
+      val st = Files.list(p)
+      try st.iterator().asScala
+        .filter(_.getFileName.toString.startsWith("batch-"))
+        .map(f => fileIndex(f) -> f).toSeq.sortBy(_._1).map(_._2)
+      finally st.close()
+    }
+  }
+
+  /** Record count of one batch file WITHOUT materializing or splitting
+    * its contents: streams the bytes and counts non-empty lines. */
+  private[sources] def countRecords(f: Path): Long = {
+    val in = Files.newInputStream(f)
+    try {
+      val buf = new Array[Byte](64 * 1024)
+      var n = 0L
+      var lineHasContent = false
+      var read = in.read(buf)
+      while (read > 0) {
+        var i = 0
+        while (i < read) {
+          if (buf(i) == '\n') {
+            if (lineHasContent) n += 1
+            lineHasContent = false
+          } else lineHasContent = true
+          i += 1
+        }
+        read = in.read(buf)
+      }
+      if (lineHasContent) n + 1 else n
+    } finally in.close()
+  }
+
+  // Per-file record counts keyed by (path, size, mtime): batch files
+  // are created whole and never rewritten in place, so a file whose
+  // size and mtime are unchanged has an unchanged count. Offsets are
+  // fetched every micro-batch and every /latest; without this cache
+  // each would re-read every byte ever written to the stream.
+  private val countCache =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), java.lang.Long]()
+
+  private def cacheKey(f: Path): (String, Long, Long) = {
+    val a = Files.readAttributes(f, classOf[BasicFileAttributes])
+    (f.toString, a.size, a.lastModifiedTime.toMillis)
+  }
+
+  private def cachedCount(f: Path): Long =
+    countCache.computeIfAbsent(cacheKey(f), _ => countRecords(f)).longValue
+
+  /** Record count (== next sequence) of one shard. */
+  private[sources] def count(dir: String, shard: Int): Long =
+    files(dir, shard).map(cachedCount).sum
+
+  /** Record count (== next sequence) of each shard in 0 until nShards. */
+  private[sources] def counts(dir: String, nShards: Int): Map[Int, Long] =
+    (0 until nShards).map(s => s -> count(dir, s)).toMap
+
+  /** One shard's record lines in the half-open sequence range
+    * [from, until). SEEK, don't skip: cumulative cached per-file counts
+    * jump straight to the first file containing `from`, and files load
+    * lazily one at a time, so a range read touches only the files it
+    * covers — a tail read stays O(batch), not O(history). Positioning
+    * is Long-safe throughout. */
+  private[sources] def lines(dir: String, shard: Int, from: Long = 0L,
+                             until: Long = Long.MaxValue): Iterator[String] = {
+    val fs = files(dir, shard)
+    var base = 0L
+    var idx = 0
+    while (idx < fs.length && base + cachedCount(fs(idx)) <= from) {
+      base += cachedCount(fs(idx)); idx += 1
+    }
+    val it = fs.iterator.drop(idx).flatMap { f =>
+      new String(Files.readAllBytes(f), UTF_8).split("\n").iterator.filter(_.nonEmpty)
+    }
+    var skipped = base
+    while (skipped < from && it.hasNext) { it.next(); skipped += 1 }
+    new Iterator[String] {
+      private var remaining = until - from
+      override def hasNext: Boolean = remaining > 0 && it.hasNext
+      override def next(): String = { remaining -= 1; it.next() }
+    }
+  }
+
+  /** The store's one writer: appends batch files under `dir/shard-N/`.
+    * Each shard's next sequence and file index are read from disk HERE,
+    * once, so a producer opened on an existing store (a restarted
+    * service, a sink epoch after a producer) continues it. Not
+    * thread-safe, and one writer at a time per store (see the object's
+    * contract) — one producer instance per simulated client, like one
+    * SDK client. */
   final class ShardedProducer(dir: String, nShards: Int) {
     require(nShards >= 1, "need at least one shard")
-    private val seq = Array.fill(nShards)(0L)
-    private val flushIdx = Array.fill(nShards)(0)
-    // Spark's file source orders same-mtime files arbitrarily, and
-    // sub-second writes collide at ms mtime resolution — stamp every
-    // batch file with a strictly increasing mtime so the stream
-    // replays in write order (the file-sim carrier of what Kinesis
-    // expresses through sequence numbers)
-    private val t0 = System.currentTimeMillis()
-    private var fileNo = 0
-    (0 until nShards).foreach { s =>
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(dir, s"shard-$s"))
+    private val existing = Array.tabulate(nShards) { s =>
+      Files.createDirectories(shardDir(dir, s))
+      files(dir, s)
     }
+    private val nextSeq = existing.map(_.map(cachedCount).sum)
+    private val nextFile = existing.map(_.lastOption.fold(0L)(fileIndex(_) + 1))
 
     /** One PutRecords call: (data, partitionKey) pairs. Splits into
       * ≤500-record chunks (the API rejects larger calls); each chunk
@@ -121,54 +241,38 @@ object SimulatedKinesis {
         call.groupBy { case (_, pk) => shardFor(pk, nShards) }
           .toSeq.sortBy(_._1)
           .foreach { case (shard, recs) =>
-            val lines = recs.map { case (data, pk) =>
-              val sn = seq(shard); seq(shard) += 1
-              // compact JSON, no library needed: data is base64 so the
-              // payload never fights the JSON escaping rules
-              val b64 = java.util.Base64.getEncoder
-                .encodeToString(data.getBytes("UTF-8"))
-              s"""{"sequenceNumber":"$sn","partitionKey":"${jsonEscape(pk)}","data":"$b64"}"""
-            }
-            val f = java.nio.file.Paths.get(dir, s"shard-$shard",
-              f"batch-${flushIdx(shard)}%06d.json")
-            flushIdx(shard) += 1
-            java.nio.file.Files.write(f,
-              (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-            fileNo += 1
-            java.nio.file.Files.setLastModifiedTime(f,
-              java.nio.file.attribute.FileTime.fromMillis(t0 + fileNo * 1000L))
+            append(shard, recs.map { case (data, pk) => (data.getBytes(UTF_8), pk) })
           }
       }
       calls.size
     }
 
-    /** Per-shard record counts written so far (spec introspection). */
-    def sequenceCounts: Seq[Long] = seq.toSeq
+    /** Whether `shard` held a sink epoch's file when this producer
+      * opened — the sink's guard against re-appending a retried epoch. */
+    private[sources] def holdsEpoch(shard: Int, epochId: Long): Boolean =
+      existing(shard).exists(_.getFileName.toString.endsWith(s"-epoch-$epochId.json"))
+
+    /** Appends `records` (data, partitionKey) to `shard` as its next
+      * batch file, tagged with `epoch` when a sink epoch writes it. The
+      * file is written under a dot-prefixed temp name and moved into
+      * place atomically, so readers never see a partial file. */
+    private[sources] def append(shard: Int, records: Seq[(Array[Byte], String)],
+                                epoch: Option[Long] = None): Unit = {
+      val first = nextSeq(shard)
+      val body = new StringBuilder
+      records.iterator.zipWithIndex.foreach { case ((data, pk), i) =>
+        body.append(encode(first + i, pk, data)).append('\n')
+      }
+      val name = f"batch-${nextFile(shard)}%06d" +
+        epoch.fold("")(e => s"-epoch-$e") + ".json"
+      val tmp = shardDir(dir, shard).resolve("." + name)
+      Files.write(tmp, body.toString.getBytes(UTF_8))
+      val f = Files.move(tmp, tmp.resolveSibling(name),
+        StandardCopyOption.ATOMIC_MOVE)
+      // the writer knows the count, so no reader re-reads the file for it
+      countCache.put(cacheKey(f), records.size.toLong)
+      nextSeq(shard) += records.size
+      nextFile(shard) += 1
+    }
   }
-
-  private val recordSchema: StructType = StructType(Seq(
-    StructField("sequenceNumber", StringType),
-    StructField("partitionKey", StringType),
-    StructField("data", StringType)))
-
-  /** Consumer half: one file stream PER SHARD, unioned. Per-shard
-    * streams (not one glob over the parent) preserve the real
-    * consumer's structure — each shard is an independent ordered
-    * iterator, and `maxFilesPerTrigger=1` caps a micro-batch at one
-    * batch file per shard so ordering across micro-batches is the
-    * per-shard write order. Emits the connector record shape plus
-    * `shardId` for diagnostics. */
-  def load(spark: SparkSession, dir: String, nShards: Int,
-           filesPerTrigger: Int = 1): DataFrame =
-    (0 until nShards).map { s =>
-      spark.readStream
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .text(s"$dir/shard-$s")
-        .select(from_json(col("value"), recordSchema).as("r"))
-        .select(
-          unbase64(col("r.data")).as("data"),
-          col("r.partitionKey").as("partitionKey"),
-          col("r.sequenceNumber").as("sequenceNumber"),
-          lit(s"shard-$s").as("shardId"))
-    }.reduce(_ unionAll _)
 }

@@ -21,8 +21,8 @@ class KinesisSinkCrashSpec extends AnyFunSuite {
 
   private def allRecords(dir: String, shards: Int): Seq[(String, String, String)] =
     (0 until shards).flatMap { s =>
-      KinesisSimProvider.shardLines(dir, s).map { l =>
-        val (sn, pk, data) = KinesisSimProvider.parse(l)
+      SimulatedKinesis.lines(dir, s).map { l =>
+        val (sn, pk, data) = SimulatedKinesis.decode(l)
         (s"shard-$s", sn, new String(data, "UTF-8") + "@" + pk)
       }
     }
@@ -72,16 +72,16 @@ class KinesisSinkCrashSpec extends AnyFunSuite {
     val w = new KinesisSimStreamingWrite(dir, 1, 0, 1)
     w.commit(0L, msgs(("a1", "u1"), ("a2", "u1")))
     w.commit(1L, msgs(("a3", "u1")))
-    val sns = KinesisSimProvider.shardLines(dir, 0)
-      .map(KinesisSimProvider.parse).map(_._1.toLong)
+    val sns = SimulatedKinesis.lines(dir, 0).toSeq
+      .map(SimulatedKinesis.decode).map(_._1.toLong)
     assert(sns == Seq(0L, 1L, 2L), s"dense cross-epoch sequences: $sns")
     // no temp artifacts survive a completed commit
-    val leftover = KinesisSimProvider.shardFiles(dir, 0)
-      .map(_.getFileName.toString)
+    val leftover = Files.list(Paths.get(dir, "shard-0")).iterator().asScala
+      .map(_.getFileName.toString).toSeq
     assert(leftover.forall(_.startsWith("batch-")), leftover.toString)
   }
 
-  test("file transport range reads seek by cached counts across batch files") {
+  test("store range reads seek by cached counts across batch files") {
     val dir = Files.createTempDirectory("graft_ft_seek").toString
     val prod = new SimulatedKinesis.ShardedProducer(dir, 1)
     // 5 batch files × 3 records: ranges below exercise exact-file,
@@ -89,11 +89,10 @@ class KinesisSinkCrashSpec extends AnyFunSuite {
     (0 until 5).foreach { b =>
       prod.putRecords((0 until 3).map(i => (s"r${b * 3 + i}", "k")))
     }
-    val t = FileTransport(dir)
-    assert(t.recordCounts(1) == Map(0 -> 15L))
+    assert(SimulatedKinesis.counts(dir, 1) == Map(0 -> 15L))
     def data(from: Long, until: Long): Seq[String] =
-      t.lines(0, from, until)
-        .map(l => new String(KinesisSimProvider.parse(l)._3, "UTF-8")).toSeq
+      SimulatedKinesis.lines(dir, 0, from, until)
+        .map(l => new String(SimulatedKinesis.decode(l)._3, "UTF-8")).toSeq
     assert(data(0, 15) == (0 until 15).map(i => s"r$i"))
     assert(data(3, 6) == Seq("r3", "r4", "r5"), "whole-file range")
     assert(data(4, 8) == Seq("r4", "r5", "r6", "r7"), "cross-boundary range")
@@ -101,14 +100,30 @@ class KinesisSinkCrashSpec extends AnyFunSuite {
     assert(data(7, 7).isEmpty, "empty half-open range")
   }
 
+  test("file order is numeric past six-digit file indices") {
+    // a long-lived shard reaches batch-1000000.json, which sorts by name
+    // BEFORE batch-999999.json; readers and the next writer must still
+    // see index order
+    val dir = Files.createTempDirectory("graft_store_index").toString
+    Files.createDirectories(Paths.get(dir, "shard-0"))
+    Files.write(Paths.get(dir, "shard-0", "batch-999999.json"),
+      (SimulatedKinesis.encode(0L, "k", bytes("r0")) + "\n").getBytes("UTF-8"))
+    new SimulatedKinesis.ShardedProducer(dir, 1).putRecords(Seq(("r1", "k")))
+    assert(Files.exists(Paths.get(dir, "shard-0", "batch-1000000.json")))
+    val back = SimulatedKinesis.lines(dir, 0).map(SimulatedKinesis.decode)
+      .map { case (sn, _, d) => (sn, new String(d, "UTF-8")) }.toSeq
+    assert(back == Seq(("0", "r0"), ("1", "r1")), s"index order: $back")
+    assert(SimulatedKinesis.lines(dir, 0, 1L, 2L).map(SimulatedKinesis.decode(_)._1).toSeq == Seq("1"))
+  }
+
   test("countRecords streams the file without materializing it") {
     val f = Files.createTempFile("graft_count", ".json")
     Files.write(f, "one\ntwo\nthree\n".getBytes("UTF-8"))
-    assert(KinesisSimProvider.countRecords(f) == 3L)
+    assert(SimulatedKinesis.countRecords(f) == 3L)
     Files.write(f, "one\ntwo\nno-trailing-newline".getBytes("UTF-8"))
-    assert(KinesisSimProvider.countRecords(f) == 3L)
+    assert(SimulatedKinesis.countRecords(f) == 3L)
     Files.write(f, Array.emptyByteArray)
-    assert(KinesisSimProvider.countRecords(f) == 0L)
+    assert(SimulatedKinesis.countRecords(f) == 0L)
   }
 
   test("restart with fewer shards than the checkpoint fails loud") {

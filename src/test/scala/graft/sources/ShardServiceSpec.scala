@@ -30,10 +30,10 @@ class ShardServiceSpec extends SparkSpec {
       // a half-open range replays exactly the requested slice, in the
       // transport's own line format (the file consumer's bytes)
       val shardOfU1 = (0 until 2)
-        .find(s => KinesisSimProvider.shardLines(dir, s)
+        .find(s => SimulatedKinesis.lines(dir, s)
           .exists(_.contains(""""partitionKey":"u1""""))).get
       val viaHttp = ShardService.Client.records(ep, shardOfU1, 0L, 2L).toSeq
-      val viaFile = KinesisSimProvider.shardLines(dir, shardOfU1).take(2)
+      val viaFile = SimulatedKinesis.lines(dir, shardOfU1).take(2).toSeq
       assert(viaHttp == viaFile, "wire lines must equal store lines")
       // non-GET -> 405; unknown shard -> 404 (the probe contract)
       val conn = new java.net.URI(s"$ep/latest/0").toURL
@@ -244,9 +244,75 @@ class ShardServiceSpec extends SparkSpec {
       val rest = ShardService.Client
         .records(ep2, 0, first.length.toLong, n.toLong).toSeq
       assert(first.length == 5000)
-      assert(first ++ rest == KinesisSimProvider.shardLines(dir, 0),
+      assert(first ++ rest == SimulatedKinesis.lines(dir, 0).toSeq,
         "resumed pagination must concatenate to the exact shard contents")
     } finally server2.stop(0)
+  }
+
+  test("a restarted service and interleaved writers continue the store, never overwrite it") {
+    // (sequenceNumber, data) of one shard's stored lines, reading the
+    // batch files directly in name order — the order every reader uses
+    def stored(dir: String, shard: Int): Seq[(Long, String)] = {
+      val d = java.nio.file.Paths.get(dir, s"shard-$shard")
+      val st = Files.list(d)
+      val names = try st.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("batch-")).toSeq.sorted finally st.close()
+      val Rec = """.*"sequenceNumber":"(\d+)".*"data":"([^"]*)".*""".r
+      names.flatMap(n => Files.readAllLines(d.resolve(n)).asScala).map {
+        case Rec(sn, b64) =>
+          (sn.toLong, new String(java.util.Base64.getDecoder.decode(b64), "UTF-8"))
+      }
+    }
+    def assertDense(dir: String, nShards: Int): Unit = (0 until nShards).foreach { s =>
+      val sns = stored(dir, s).map(_._1)
+      assert(sns == sns.indices.map(_.toLong), s"shard-$s sequences: $sns")
+    }
+
+    // a service stopped and started again on the same directory
+    val dir = Files.createTempDirectory("graft_shard_http_restart").toString
+    val acked = scala.collection.mutable.ArrayBuffer.empty[String]
+    var lastLatest = Map(0 -> 0L, 1 -> 0L)
+    def put(ep: String, recs: Seq[(String, String)]): Unit = {
+      assert(ShardService.Client.putRecords(ep, recs) == 1)
+      acked ++= recs.map(_._1)
+      val latest = ShardService.Client.latestAll(ep)
+      assert(latest.forall { case (s, n) => n >= lastLatest(s) },
+        s"/latest went backwards: $lastLatest -> $latest")
+      assert(latest.values.sum == acked.size.toLong, s"$latest after ${acked.size} puts")
+      lastLatest = latest
+    }
+    val first = ShardService.start(dir, nShards = 2)
+    try {
+      val ep = s"http://127.0.0.1:${first.getAddress.getPort}"
+      put(ep, Seq(("a1", "u1"), ("b1", "u2"), ("a2", "u1")))
+      put(ep, Seq(("a3", "u1"), ("b2", "u2")))
+    } finally first.stop(0)
+    val second = ShardService.start(dir, nShards = 2)
+    try {
+      val ep = s"http://127.0.0.1:${second.getAddress.getPort}"
+      put(ep, Seq(("a4", "u1"), ("b3", "u2")))
+      val served = (0 until 2).flatMap(s =>
+        ShardService.Client.records(ep, s, 0L, Long.MaxValue)
+          .map(l => new String(SimulatedKinesis.decode(l)._3, "UTF-8")))
+      assert(served.sorted == acked.sorted, s"acknowledged records lost: $served")
+    } finally second.stop(0)
+    assertDense(dir, 2)
+
+    // a producer put, a sink epoch, another put: each writer in turn
+    // continues from what the one before it left on disk
+    val mixed = Files.createTempDirectory("graft_store_interleave").toString
+    new SimulatedKinesis.ShardedProducer(mixed, 2)
+      .putRecords(Seq(("p1", "u1"), ("q1", "u2")))
+    new KinesisSimStreamingWrite(mixed, 2, 0, 1).commit(0L, Array(SimRecords(0,
+      Seq(("p2", "u1"), ("q2", "u2")).map { case (d, k) => (d.getBytes("UTF-8"), k) })))
+    new SimulatedKinesis.ShardedProducer(mixed, 2)
+      .putRecords(Seq(("p3", "u1"), ("q3", "u2")))
+    assertDense(mixed, 2)
+    val mixedData = (0 until 2).flatMap(stored(mixed, _)).map(_._2)
+    assert(mixedData.size == 6 &&
+      mixedData.filter(_.startsWith("p")) == Seq("p1", "p2", "p3") &&
+      mixedData.filter(_.startsWith("q")) == Seq("q1", "q2", "q3"),
+      s"per-key write order in name order: $mixedData")
   }
 
   test("hostile partition keys round-trip the wire, the store, and the connector") {
@@ -260,8 +326,8 @@ class ShardServiceSpec extends SparkSpec {
       assert(ShardService.Client.putRecords(ep, recs) == 1)
       // store lines stay one-record-per-line and parse back exactly
       val viaStore = (0 until 2)
-        .flatMap(s => KinesisSimProvider.shardLines(dir, s))
-        .map(KinesisSimProvider.parse)
+        .flatMap(s => SimulatedKinesis.lines(dir, s))
+        .map(SimulatedKinesis.decode)
         .map(r => (new String(r._3, "UTF-8"), r._2)).toSet
       assert(viaStore == recs.toSet, s"store round-trip: $viaStore")
       // and the V2 connector over the same wire sees the same keys

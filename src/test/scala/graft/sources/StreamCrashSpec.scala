@@ -31,8 +31,8 @@ class StreamCrashSpec extends SparkSpec {
       .option("checkpointLocation", ckpt)
       .start()
     def outRecords(): Seq[(String, Long)] =
-      KinesisSimProvider.shardLines(out, 0).map { l =>
-        val (sn, _, data) = KinesisSimProvider.parse(l)
+      SimulatedKinesis.lines(out, 0).toSeq.map { l =>
+        val (sn, _, data) = SimulatedKinesis.decode(l)
         (new String(data, "UTF-8"), sn.toLong)
       }
     val q1 = run()
