@@ -72,10 +72,75 @@ object Bench {
   private[graft] def fmt(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
+  // The measurement knobs, shared by Bench and the soaks: the load
+  // gate's bound and its longest wait, the passes (or reps) per
+  // measurement, and the small scale every harness warms codegen on.
+  private[graft] val MaxLoad: Double =
+    sys.env.get("SPARK_GRAFT_BENCH_MAX_LOAD").map(_.toDouble).getOrElse(8.0)
+  private[graft] val MaxWaitS: Int =
+    sys.env.get("SPARK_GRAFT_BENCH_MAX_WAIT_S").map(_.toInt).getOrElse(600)
+  private[graft] val Passes: Int =
+    sys.env.get("SPARK_GRAFT_BENCH_PASSES").map(_.toInt).getOrElse(3)
+  private[graft] val WarmDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
+
+  /** The 1-minute load average, -1 when `/proc/loadavg` is unreadable. */
+  private[graft] def load1(): Double =
+    try scala.io.Source.fromFile("/proc/loadavg").mkString
+      .split("\\s+").head.toDouble
+    catch { case _: Throwable => -1.0 }
+
+  /** LOAD GATE: a measurement that starts against a loaded box measures the
+    * queue, not the query. Waits (bounded by `maxWaitS`) for the
+    * 1-minute load to drop to `maxLoad`; returns the seconds waited
+    * and whether the measurement still starts GATED, which is loud on
+    * stderr and recorded in the artifact, never silently averaged. */
+  private[graft] def loadGate(log: String, maxLoad: Double = MaxLoad,
+                              maxWaitS: Int = MaxWaitS): (Int, Boolean) = {
+    var waited = 0
+    if (load1() > maxLoad)
+      System.err.println(f"[$log] load gate: loadavg ${load1()}%.1f > $maxLoad%.1f" +
+        s" — waiting up to ${maxWaitS}s")
+    while (load1() > maxLoad && waited < maxWaitS) {
+      Thread.sleep(5000); waited += 5
+    }
+    val gated = load1() > maxLoad
+    if (gated)
+      System.err.println(f"[$log] WARNING: starting GATED at loadavg ${load1()}%.1f" +
+        f" > $maxLoad%.1f after ${waited}s — the artifact is annotated")
+    (waited, gated)
+  }
+
+  /** The timed region: `profile`'s tag for `key` is set before the
+    * timer starts and cleared after it stops, so the profile counts
+    * exactly the work the seconds measure. */
+  private[graft] def timed(profile: Profile, key: String)(body: => Unit): Double =
+    profile.attributed(key) {
+      val t0 = System.nanoTime()
+      body
+      (System.nanoTime() - t0) / 1e9
+    }
+
+  /** Runs `df` to completion through the noop sink: count() would let
+    * Catalyst prune the computed columns and time a hollow plan. */
+  private[graft] def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Runs each named query once over [[WarmDir]]: Janino codegen + JIT
+    * is the dominant one-shot cost, and the generated-code cache keys
+    * on plan shape, which is the same at every scale factor. A query
+    * that fails warm-up pays cold codegen in its timed run, so the
+    * failure is loud. */
+  private[graft] def warm(spark: SparkSession, names: Iterable[String], log: String): Unit =
+    names.foreach { n =>
+      try noop(SparkEntry.queries(n)(spark, WarmDir))
+      catch { case e: Throwable =>
+        System.err.println(s"[$log] warm-up $n failed: ${e.getMessage}")
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES").map(_.toInt).getOrElse(3)
     val spark = GraftSession.get()
     // comma-separated allowlist for isolated reruns (mirrors
     // SPARK_GRAFT_VERIFY_ONLY); absent = the full suite. Warm-up is
@@ -83,55 +148,22 @@ object Bench {
     // the full suite's codegen-cache state.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] warm-up $name failed: ${e.getMessage}")
-        }
-      }
+    warm(spark, SparkEntry.queries.keys.filter(n => only.forall(_.contains(n))), "bench")
     val profile = new Profile(spark)
-    def timeOnce(name: String, fn: (SparkSession, String) => DataFrame,
-                 pass: Int): Double = profile.attributed(s"$name#$pass") {
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        -1.0
-      }
-    }
     // a query lands in "errors" (and reports -1) only when EVERY pass
     // failed; a transient single-pass failure is stderr-only and the
     // min is taken over the passes that succeeded
-    def load1(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split("\\s+").head.toDouble
-      catch { case _: Throwable => -1.0 }
-    // LOAD GATE (VERDICT r14 item 2): two consecutive official runs
-    // drifted ~9% uniformly with nothing to arbitrate environment vs
-    // code. Before the timed sweeps, wait (bounded) for the 1-minute
-    // load to drop under the gate; the artifact records the gate, the
-    // wait, and whether the run STARTED gated — a still-gated run is
-    // loudly annotated, never silently averaged into history.
-    val maxLoad = sys.env.get("SPARK_GRAFT_BENCH_MAX_LOAD")
-      .map(_.toDouble).getOrElse(8.0)
-    val maxWaitS = sys.env.get("SPARK_GRAFT_BENCH_MAX_WAIT_S")
-      .map(_.toInt).getOrElse(600)
-    var waitedS = 0
-    while (load1() > maxLoad && waitedS < maxWaitS) {
-      System.err.println(
-        f"[bench] load gate: loadavg ${load1()}%.1f > $maxLoad%.1f — " +
-          s"waiting (${waitedS}s/${maxWaitS}s)")
-      Thread.sleep(15000); waitedS += 15
-    }
-    val gatedStart = load1() > maxLoad
-    if (gatedStart)
-      System.err.println(
-        f"[bench] WARNING: starting GATED at loadavg ${load1()}%.1f > " +
-          f"$maxLoad%.1f after ${waitedS}s — artifact will be annotated")
+    def timeOnce(name: String, fn: (SparkSession, String) => DataFrame,
+                 pass: Int): Double =
+      try timed(profile, s"$name#$pass")(noop(fn(spark, sfDir)))
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        -1.0
+      }
+    // gated once, before the timed sweeps: two consecutive official
+    // runs drifted ~9% uniformly with nothing to arbitrate environment
+    // vs code
+    val (waitedS, gatedStart) = loadGate("bench")
     val loadStart = load1()
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -139,7 +171,7 @@ object Bench {
     // sweep the full suite once per pass (pass 2+ re-runs the whole
     // alphabet) so a query's samples are minutes apart — independent
     // draws w.r.t. minutes-scale co-tenant load bursts
-    val sweeps = (1 to passes).map { p =>
+    val sweeps = (1 to Passes).map { p =>
       ordered.map { case (name, fn) => timeOnce(name, fn, p) }
     }
     val results = ordered.zipWithIndex.map { case ((name, _), i) =>
@@ -171,8 +203,8 @@ object Bench {
     }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val gate = s"""{"max_load":${fmt(maxLoad)},"waited_s":$waitedS,"gated_start":$gatedStart}"""
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","passes":$passes,"pass_times":$pts,"loadavg":{"start":${fmt(loadStart)},"end":${fmt(loadEnd)}},"load_gate":$gate,"errors":$errs,"layers":$layers}"""
+    val gate = s"""{"max_load":${fmt(MaxLoad)},"waited_s":$waitedS,"gated_start":$gatedStart}"""
+    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","passes":$Passes,"pass_times":$pts,"loadavg":{"start":${fmt(loadStart)},"end":${fmt(loadEnd)}},"load_gate":$gate,"errors":$errs,"layers":$layers}"""
     println(line)
     // the driver's artifact keeps only a truncated stdout tail, which
     // loses the first ~half of the per-query timings — persist the
@@ -188,7 +220,7 @@ object Bench {
     // `parsed` field came out null four rounds running). Headline
     // numbers + error list here; the complete per-query record is
     // the line above and the persisted file.
-    val compact = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","passes":$passes,"n_queries":${results.size},"loadavg":{"start":${fmt(loadStart)},"end":${fmt(loadEnd)}},"load_gate":$gate,"errors":$errs,"full_record":"$out"}"""
+    val compact = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","passes":$Passes,"n_queries":${results.size},"loadavg":{"start":${fmt(loadStart)},"end":${fmt(loadEnd)}},"load_gate":$gate,"errors":$errs,"full_record":"$out"}"""
     println(compact)
     spark.stop()
   }
@@ -316,4 +348,49 @@ private[graft] final class Profile(spark: SparkSession) {
     spark.sparkContext.removeSparkListener(jobListener)
     spark.listenerManager.unregister(planListener)
   }
+}
+
+/** One side's timed reps: seconds, and the [[Profile]] key of each. */
+private[graft] final case class Reps(times: Seq[Double], keys: Seq[String]) {
+  def min: Double = times.min
+  def minKey: String = keys(times.indexOf(min))
+}
+
+/** The soaks' rep loop: sides are timed INTERLEAVED (A,B,A,B…), so
+  * both sides of a ratio sample the same load trajectory — the soak
+  * self-loads the machine, and all-A-then-all-B let the B side sample
+  * the later, heavier part of it. Before every rep the
+  * load gate runs and `System.gc()` nudges the ContextCleaner, so the
+  * previous rep's dead checkpoint blocks leave the storage pool; both
+  * stay outside the timer. Gate waits and gated starts are tallied
+  * for the artifact. */
+private[graft] final class RepLoop(spark: SparkSession, log: String,
+                                   maxLoad: Double = Bench.MaxLoad,
+                                   maxWaitS: Int = Bench.MaxWaitS) {
+  val profile = new Profile(spark)
+  private var waitedS = 0
+  private var gatedReps = 0
+
+  /** `passes` rounds of one rep per side, keyed `row/side#pass`. */
+  def interleaved(row: String, passes: Int)(sides: (String, () => Unit)*): Seq[Reps] = {
+    val rounds = (1 to passes).map { p =>
+      sides.map { case (side, body) =>
+        val (w, gated) = Bench.loadGate(log, maxLoad, maxWaitS)
+        waitedS += w
+        if (gated) gatedReps += 1
+        System.gc()
+        val key = s"$row/$side#$p"
+        (Bench.timed(profile, key)(body()), key)
+      }
+    }
+    sides.indices.map(i => Reps(rounds.map(_(i)._1), rounds.map(_(i)._2)))
+  }
+
+  /** `{side: Layers.json of that side's minimum rep, …}`. */
+  def layersJson(sides: Seq[(String, Reps)]): String =
+    profile.layers(sides.map(_._2.minKey): _*).zip(sides)
+      .map { case (l, (side, _)) => s""""$side": ${l.json}""" }.mkString("{", ", ", "}")
+
+  def gateJson: String =
+    s"""{"max_load": $maxLoad, "per_rep": true, "gate_waited_s": $waitedS, "reps_started_gated": $gatedReps}"""
 }

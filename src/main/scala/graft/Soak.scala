@@ -26,6 +26,10 @@ import org.apache.spark.sql.functions._
   *    the pre-round-10 vowel-rotation fixture: 5 distinct rotations
   *    for 10 copies + verbatim vectors — see the generate() notes).
   *
+  * Reps run through [[RepLoop]]: base and soaked interleaved, each
+  * gated, timed and profiled by [[Bench]]'s core, so every JSON row
+  * also carries the `layers` of each side's minimum rep.
+  *
   * Usage: runMain graft.Soak [baseDir] [outDir] [copies] [queryCsv] [jsonOut]
   * (queryCsv = optional comma-separated subset of SoakQueries, or the
   * literal `gated` for the regression-gated slice; jsonOut = optional
@@ -302,77 +306,6 @@ object Soak {
     }, "embeddings", 8)
   }
 
-  /** Per-rep load gate (VERDICT r16 item 1 — lifted from
-    * `graft.SoakFold`, which grew it in round 16): the soak self-loads
-    * the machine, and a rep that starts against a loaded box measures
-    * the queue, not the query — SOAK_r16_new ended at loadavg 17.7 and
-    * its newest row's rep arrays were 3.3× wide. Before each timed
-    * measurement, wait (bounded) for the 1-minute load to drop under
-    * SPARK_GRAFT_SOAK_MAX_LOAD (default 8); total waits land in the
-    * artifact and a rep that STARTS gated is loud on stderr. */
-  private val maxLoad = sys.env.get("SPARK_GRAFT_SOAK_MAX_LOAD")
-    .map(_.toDouble).getOrElse(8.0)
-  private val maxWaitS = sys.env.get("SPARK_GRAFT_SOAK_MAX_WAIT_S")
-    .map(_.toInt).getOrElse(300)
-  private var gateWaitedS = 0
-  private var gatedReps = 0
-
-  private def loadGate(): Unit = {
-    var waited = 0
-    while (load1() > maxLoad && waited < maxWaitS) {
-      Thread.sleep(5000); waited += 5
-    }
-    gateWaitedS += waited
-    if (load1() > maxLoad) {
-      gatedReps += 1
-      System.err.println(
-        f"[soak] WARNING: rep starts GATED at loadavg ${load1()}%.1f" +
-          f" > $maxLoad%.1f after ${waited}s wait")
-    }
-  }
-
-  /** All rep times, not just the min: SOAK_r11's single-number rows
-    * whipsawed up to 2.4× against r10 on an identical fixture and
-    * nothing in the artifact let a reader tell noise from drift
-    * (VERDICT r11 item 2). The JSON now records every rep, same as
-    * `bench_full.json`'s pass_times. */
-  private def timeOne(spark: SparkSession, name: String,
-                      dir: String): Double = {
-    loadGate()
-    // localCheckpoint blocks from the PREVIOUS pass are freed by the
-    // ContextCleaner only after a driver GC notices the dead RDD
-    // references; on a big heap that can take minutes, and stale
-    // corpus-sized checkpoints squat in the storage pool while the
-    // next pass's sorts fight for execution memory. Nudge the
-    // cleaner so every pass starts with a drained block store.
-    System.gc()
-    val t0 = System.nanoTime()
-    SparkEntry.queries(name)(spark, dir)
-      .write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** INTERLEAVED base/soaked reps — B,S,B,S….
-    * The soak self-loads the machine (SOAK_r12's loadavg ramped
-    * 1.99 → 16.57 within the run), and the old all-base-then-all-
-    * soaked order meant the soaked side systematically sampled the
-    * LATER, heavier part of each query's load trajectory — an
-    * unquantified (if conservative) ratio bias the r12 verdict
-    * flagged (What's wrong #2). Alternating reps makes both sides
-    * draws from the same trajectory. */
-  private def timeAb(spark: SparkSession, name: String, base: String,
-                     soaked: String, passes: Int): (Seq[Double], Seq[Double]) = {
-    val pairs = (1 to passes).map { _ =>
-      (timeOne(spark, name, base), timeOne(spark, name, soaked))
-    }
-    (pairs.map(_._1), pairs.map(_._2))
-  }
-
-  private def load1(): Double =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString
-      .split("\\s+").head.toDouble
-    catch { case _: Throwable => -1.0 }
-
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("target/soak/sf1")
@@ -411,41 +344,35 @@ object Soak {
       System.err.println(s"[soak] generating $out = $copies × $base")
       generate(spark, base, out, copies)
     }
-    // warm codegen/JIT on the small scale before any timed pass
-    soakQueries.foreach { n =>
-      SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")
-        .write.format("noop").mode("overwrite").save()
-    }
-    // reps per (query, scale) measurement — min-of-reps is the
-    // reported number; >=3 is the house minimum for any adopted
-    // conclusion (min-of-2 failed twice on this machine, see
-    // ARCHITECTURE §7 round-9 notes)
-    val passes = sys.env.get("SPARK_GRAFT_SOAK_PASSES")
-      .map(_.toInt).getOrElse(3)
-    val loadStart = load1()
+    Bench.warm(spark, soakQueries, "soak")
+    val loop = new RepLoop(spark, "soak")
+    val loadStart = Bench.load1()
     println(s"| query | ${base.split('/').last} s | sf1 s | ratio (ideal ≤ ~$copies) |")
     println("|---|---|---|---|")
     val results = soakQueries.map { n =>
-      val (rB, rS) = timeAb(spark, n, base, out, passes)
-      val (tB, tS) = (rB.min, rS.min)
-      println(f"| $n | $tB%.2f | $tS%.2f | ${tS / tB}%.1f× |")
-      (n, rB, rS)
+      def run(dir: String): () => Unit =
+        () => Bench.noop(SparkEntry.queries(n)(spark, dir))
+      val Seq(rB, rS) = loop.interleaved(n, Bench.Passes)("base" -> run(base), "sf1" -> run(out))
+      println(f"| $n | ${rB.min}%.2f | ${rS.min}%.2f | ${rS.min / rB.min}%.1f× |")
+      (n, rB, rS, loop.layersJson(Seq("base" -> rB, "sf1" -> rS)))
     }
-    val loadEnd = load1()
+    val loadEnd = Bench.load1()
     jsonOut.foreach { path =>
-      def arr(v: Seq[Double]) =
-        v.map(t => f"$t%.3f").mkString("[", ", ", "]")
-      val rows = results.map { case (n, rB, rS) =>
+      // every rep, not just the min, so a reader can tell noise from
+      // drift, as with bench_full.json's pass_times
+      def arr(v: Reps) =
+        v.times.map(t => f"$t%.3f").mkString("[", ", ", "]")
+      val rows = results.map { case (n, rB, rS, layers) =>
         val (tB, tS) = (rB.min, rS.min)
-        f"""    "$n": {"base_s": $tB%.3f, "sf1_s": $tS%.3f, "ratio": ${tS / tB}%.2f, "base_reps": ${arr(rB)}, "sf1_reps": ${arr(rS)}}"""
+        f"""    "$n": {"base_s": $tB%.3f, "sf1_s": $tS%.3f, "ratio": ${tS / tB}%.2f, "base_reps": ${arr(rB)}, "sf1_reps": ${arr(rS)}, "layers": $layers}"""
       }.mkString(",\n")
       val json =
         s"""{
            |  "base": "$base",
            |  "copies": $copies,
-           |  "passes": $passes,
+           |  "passes": ${Bench.Passes},
            |  "loadavg": {"start": $loadStart, "end": $loadEnd},
-           |  "load_gate": {"max_load": $maxLoad, "per_rep": true, "gate_waited_s": $gateWaitedS, "reps_started_gated": $gatedReps},
+           |  "load_gate": ${loop.gateJson},
            |  "queries": {
            |$rows
            |  }

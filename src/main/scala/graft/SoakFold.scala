@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Checkpoints.materialize
 import graft.dedup.Dedup
 import graft.operators.GraphOps
 
@@ -35,15 +36,13 @@ import graft.operators.GraphOps
   *    survivors.
   *
   * Round 16 (VERDICT r15 item 1): the harness load-gates BETWEEN
-  * TIMED REPS the way the bench gates its start — the r15 soak runs
-  * started clean but ended at loadavg 17-23, leaving the PPR
-  * deletion fold's 30× point noise-bound (rep arrays 2.8-3.5× wide).
-  * Before each timed measurement the harness waits (bounded) for the
-  * 1-minute load to drop under SPARK_GRAFT_SOAK_MAX_LOAD (default 8);
-  * total gate waits are annotated in the artifact, and a rep that
-  * STARTS gated is loud on stderr. SPARK_GRAFT_SOAKFOLD_ONLY
-  * (comma-separated shape-name substrings) restricts the measured
-  * rows for targeted re-runs.
+  * TIMED REPS — the r15 soak runs started clean but ended at loadavg
+  * 17-23, leaving the PPR deletion fold's 30× point noise-bound (rep
+  * arrays 2.8-3.5× wide). Reps run through [[RepLoop]] with
+  * [[Bench]]'s gate, timer and [[Profile]], so every row also
+  * carries the `layers` of each side's minimum rep.
+  * SPARK_GRAFT_SOAKFOLD_ONLY (comma-separated shape-name substrings)
+  * restricts the measured rows for targeted re-runs.
   *
   * Usage: runMain graft.SoakFold [baseDir] [soakedDir] [jsonOut]
   * (soakedDir must already exist — generate it with graft.Soak;
@@ -51,52 +50,17 @@ import graft.operators.GraphOps
   * ordered.) */
 object SoakFold {
 
-  private val maxLoad = sys.env.get("SPARK_GRAFT_SOAK_MAX_LOAD")
-    .map(_.toDouble).getOrElse(8.0)
-  private val maxWaitS = sys.env.get("SPARK_GRAFT_SOAK_MAX_WAIT_S")
-    .map(_.toInt).getOrElse(300)
-  private var gateWaitedS = 0
-  private var gatedReps = 0
-
-  /** Wait (bounded) for the 1-minute load to clear the gate before a
-    * timed rep — the bench's start gate applied per-measurement. */
-  private def loadGate(): Unit = {
-    var waited = 0
-    while (load1() > maxLoad && waited < maxWaitS) {
-      Thread.sleep(5000); waited += 5
-    }
-    gateWaitedS += waited
-    if (load1() > maxLoad) {
-      gatedReps += 1
-      System.err.println(
-        f"[soakfold] WARNING: rep starts GATED at loadavg ${load1()}%.1f" +
-          f" > $maxLoad%.1f after ${waited}s wait")
-    }
-  }
-
-  /** SPARK_GRAFT_SOAK_DISK_CKPT=1 pins state through RELIABLE disk
-    * checkpoints instead of in-heap localCheckpoint blocks — the 100×
-    * fixture's pinned relations (pairs, labels, full state pair, PPR
-    * trajectory, survivors) exceed any single-JVM heap as MEMORY_AND_
-    * DISK blocks (observed: hard OOM at 64g), and a real cluster
-    * would hold maintained state on distributed storage anyway.
-    * GraphOps.materialize switches itself the same way once the
-    * session has a checkpoint dir, so BOTH sides of every ratio (fold
-    * and from-scratch anchor) run the same storage policy. */
+  /** SPARK_GRAFT_SOAK_DISK_CKPT=1 gives the session a checkpoint dir,
+    * so state pins through RELIABLE disk checkpoints instead of
+    * in-heap localCheckpoint blocks — the 100× fixture's pinned
+    * relations (pairs, labels, full state pair, PPR trajectory,
+    * survivors) exceed any single-JVM heap as MEMORY_AND_DISK blocks
+    * (observed: hard OOM at 64g), and a real cluster would hold
+    * maintained state on distributed storage anyway. The operators
+    * follow the same [[Checkpoints]] policy, so BOTH sides of every
+    * ratio (fold and from-scratch anchor) run the same storage. */
   private val diskCkpt: Boolean =
     sys.env.get("SPARK_GRAFT_SOAK_DISK_CKPT").exists(_ == "1")
-
-  private def pin(df: DataFrame): DataFrame =
-    if (diskCkpt) df.checkpoint(eager = true)
-    else df.localCheckpoint(eager = true)
-
-  private def timeOne(df: => DataFrame): Double = {
-    loadGate()
-    System.gc()
-    val t0 = System.nanoTime()
-    df.write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
-  }
 
   /** Comma-separated substrings restricting which rows run — the
     * targeted-re-run lever (e.g. "del_tight,ppr_del" re-measures just
@@ -113,19 +77,31 @@ object SoakFold {
     only.forall(_.exists(t =>
       if (t.startsWith("=")) name == t.drop(1) else name.contains(t)))
 
-  /** (shape, foldReps, scratchReps, |delta|, |ball-side prior|) for
-    * both delta shapes on one fixture directory. */
-  private def measure(spark: SparkSession, dir: String,
-                      passes: Int): Seq[(String, Seq[Double], Seq[Double], Long)] = {
+  /** One measured row: fold and scratch reps, |delta|, and the
+    * `layers` of each side's minimum rep. */
+  private final case class Row(shape: String, fold: Reps, scratch: Reps,
+                               nDelta: Long, layers: String)
+
+  /** Every selected row on one fixture directory, its Profile keys
+    * prefixed with `tag`. */
+  private def measure(spark: SparkSession, tag: String, dir: String,
+                      loop: RepLoop): Seq[Row] = {
+    // fold vs from-scratch, interleaved F,S,F,S
+    def row(shape: String, nDelta: Long)(fold: => DataFrame,
+                                        scratch: => DataFrame): Seq[Row] = {
+      val Seq(f, s) = loop.interleaved(s"${tag}_$shape", Bench.Passes)(
+        "fold" -> (() => Bench.noop(fold)), "scratch" -> (() => Bench.noop(scratch)))
+      Seq(Row(shape, f, s, nDelta, loop.layersJson(Seq("fold" -> f, "scratch" -> s))))
+    }
     val pairs = Dedup.simhashPairs(Tables.documents(spark, dir))
-      .select("id1", "id2").transform(pin)
+      .select("id1", "id2").transform(materialize(_))
 
     // component-sliced deltas: cluster ids are component-minimum
     // doc ids; an edge's endpoints share a component, so one-sided
     // membership decides the edge and the 5-hop ball can never
     // leave the slice
     val labels = GraphOps.connectedComponents(pairs)
-      .transform(pin)
+      .transform(materialize(_))
     def compSlice(mod: Int): DataFrame = {
       val picked = labels.filter(col("cluster_id") % mod === 0)
         .select("doc_id")
@@ -173,81 +149,57 @@ object SoakFold {
     // row never builds the full-graph pair
     lazy val stFull = GraphOps.pageRankEdgeState(pairs)
     lazy val trajFull = GraphOps.pageRankTrajectoryFromEdges(stFull,
-      iterations = 5).transform(pin)
+      iterations = 5).transform(materialize(_))
     lazy val nodesFull = pairs.select(col("id1").as("n"))
       .unionByName(pairs.select(col("id2").as("n"))).distinct()
-      .transform(pin)
+      .transform(materialize(_))
     // FLOOR rows (VERDICT r16 item 2): the deletion fold's output is
     // the merged (iterations+1)·|V| trajectory plus the survivor |E|
     // state, each materialized through the same pin policy the fold
     // itself uses — time an IDENTITY pass of each (read the pinned
-    // relation, write it back through pin(); no ball rounds, no
+    // relation, write it back through materialize; no ball rounds, no
     // joins) so the irreducible state-write floor is MEASURED and the
     // fold's margin can be decomposed into floor + incremental
     // compute. Reported with fold == scratch == floor time (ratio 1
     // by construction; the number, not the ratio, is the datum).
-    def timeFloorOf(df: => DataFrame): Double = {
-      loadGate()
-      System.gc()
-      val t0 = System.nanoTime()
-      pin(df) // eager: materializes every row through the pin policy
-      (System.nanoTime() - t0) / 1e9
-    }
-    val floorRows = {
-      val wantTraj = rowOn("floor_traj_write")
-      val wantEdges = rowOn("floor_edges_write")
-      val tRow =
-        if (!wantTraj) Seq.empty
-        else {
-          val r = (1 to passes).map(_ =>
-            timeFloorOf(trajFull.select("node", "iter", "pr")))
-          Seq(("floor_traj_write", r, r, 0L))
-        }
-      val eRow =
-        if (!wantEdges) Seq.empty
-        else {
-          val r = (1 to passes).map(_ =>
-            timeFloorOf(stFull.select("src", "dst", "deg")))
-          Seq(("floor_edges_write", r, r, 0L))
-        }
-      tRow ++ eRow
-    }
+    def floorRow(shape: String)(df: => DataFrame): Seq[Row] =
+      if (!rowOn(shape)) Seq.empty
+      else {
+        df.schema // builds the lazy full-graph state outside the timer
+        // eager: materializes every row through the pin policy
+        val Seq(r) = loop.interleaved(s"${tag}_$shape", Bench.Passes)(
+          "floor" -> (() => materialize(df)))
+        Seq(Row(shape, r, r, 0L, loop.layersJson(Seq("fold" -> r, "scratch" -> r))))
+      }
+    val floorRows =
+      floorRow("floor_traj_write")(trajFull.select("node", "iter", "pr")) ++
+        floorRow("floor_edges_write")(stFull.select("src", "dst", "deg"))
     val delRows = addShapes.filterNot(_._1.startsWith("broad"))
       .flatMap { case (shape, delta0) =>
         val wantPr = rowOn(s"del_$shape")
         val wantPpr = shape != "scattered" && rowOn(s"ppr_del_$shape")
         if (!wantPr && !wantPpr) Seq.empty
         else {
-          val delta = delta0.transform(pin)
+          if (wantPr) trajFull.schema // the full-graph state, built outside the timer
+          val delta = delta0.transform(materialize(_))
           val nDelta = delta.count()
           val survivors = pairs.join(delta, Seq("id1", "id2"), "left_anti")
-            .transform(pin)
+            .transform(materialize(_))
           val prRow =
             if (!wantPr) Seq.empty
-            else {
-              val r = (1 to passes).map { _ =>
-                val f = timeOne(GraphOps.pageRankDelete(trajFull, stFull,
-                  delta, iterations = 5))
-                val s = timeOne(GraphOps.pageRank(survivors, iterations = 5))
-                (f, s)
-              }
-              Seq((s"del_$shape", r.map(_._1), r.map(_._2), nDelta))
-            }
+            else row(s"del_$shape", nDelta)(
+              GraphOps.pageRankDelete(trajFull, stFull, delta, iterations = 5),
+              GraphOps.pageRank(survivors, iterations = 5))
           val pprRow =
             if (!wantPpr) Seq.empty
             else {
               val seeds = nodesFull.filter(col("n") % 7 === 0)
-                .select(col("n").as("node")).transform(pin)
+                .select(col("n").as("node")).transform(materialize(_))
               val ptraj = GraphOps.pprTrajectoryFromEdges(stFull, seeds,
-                iterations = 5).transform(pin)
-              val r = (1 to passes).map { _ =>
-                val f = timeOne(GraphOps.pprDelete(ptraj, stFull, delta,
-                  seeds, iterations = 5))
-                val s = timeOne(GraphOps.personalizedPageRank(survivors,
-                  seeds, iterations = 5))
-                (f, s)
-              }
-              Seq((s"ppr_del_$shape", r.map(_._1), r.map(_._2), nDelta))
+                iterations = 5).transform(materialize(_))
+              row(s"ppr_del_$shape", nDelta)(
+                GraphOps.pprDelete(ptraj, stFull, delta, seeds, iterations = 5),
+                GraphOps.personalizedPageRank(survivors, seeds, iterations = 5))
             }
           prRow ++ pprRow
         }
@@ -259,14 +211,14 @@ object SoakFold {
       if (!wantAdd && !wantPpr) Seq.empty
       else {
       val prior = pairs.join(delta0, Seq("id1", "id2"), "left_anti")
-        .transform(pin)
+        .transform(materialize(_))
       val nodes0 = prior.select(col("id1").as("n"))
         .unionByName(prior.select(col("id2").as("n"))).distinct()
       // node-preserving contract: both endpoints must survive in prior
       val delta = delta0
         .join(nodes0.withColumnRenamed("n", "id1"), Seq("id1"), "left_semi")
         .join(nodes0.withColumnRenamed("n", "id2"), Seq("id2"), "left_semi")
-        .transform(pin)
+        .transform(materialize(_))
       val nDelta = delta.count()
       require(nDelta > 0, s"$shape delta is empty on $dir — fixture bug")
       // amortized state PAIR: trajectory + edge-degree state, built
@@ -277,15 +229,10 @@ object SoakFold {
         if (!wantAdd) Seq.empty
         else {
           val traj = GraphOps.pageRankTrajectoryFromEdges(st, iterations = 5)
-            .transform(pin)
-          val reps = (1 to passes).map { _ =>
-            val f = timeOne(GraphOps.pageRankDeltaFromState(traj, st, delta,
-              iterations = 5))
-            val s = timeOne(GraphOps.pageRank(prior.unionByName(delta),
-              iterations = 5))
-            (f, s)
-          }
-          Seq((shape, reps.map(_._1), reps.map(_._2), nDelta))
+            .transform(materialize(_))
+          row(shape, nDelta)(
+            GraphOps.pageRankDeltaFromState(traj, st, delta, iterations = 5),
+            GraphOps.pageRank(prior.unionByName(delta), iterations = 5))
         }
       // PPR twin on the SAME fixture/shape (tight + scattered only —
       // broad is pagerank's break-even probe): seeds = every 7th
@@ -294,34 +241,23 @@ object SoakFold {
         if (!wantPpr) Seq.empty
         else {
           val seeds = nodes0.filter(col("n") % 7 === 0)
-            .select(col("n").as("node")).transform(pin)
+            .select(col("n").as("node")).transform(materialize(_))
           val ptraj = GraphOps.pprTrajectoryFromEdges(st, seeds,
-            iterations = 5).transform(pin)
-          val r = (1 to passes).map { _ =>
-            val f = timeOne(GraphOps.pprDeltaFromState(ptraj, st, delta,
-              seeds, iterations = 5))
-            val s = timeOne(GraphOps.personalizedPageRank(
-              prior.unionByName(delta), seeds, iterations = 5))
-            (f, s)
-          }
-          Seq((s"ppr_$shape", r.map(_._1), r.map(_._2), nDelta))
+            iterations = 5).transform(materialize(_))
+          row(s"ppr_$shape", nDelta)(
+            GraphOps.pprDeltaFromState(ptraj, st, delta, seeds, iterations = 5),
+            GraphOps.personalizedPageRank(prior.unionByName(delta), seeds,
+              iterations = 5))
         }
       addRows ++ pprRows
       }
     }.flatten ++ delRows ++ floorRows
   }
 
-  private def load1(): Double =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString
-      .split("\\s+").head.toDouble
-    catch { case _: Throwable => -1.0 }
-
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val soaked = args.lift(1).getOrElse("target/soak/sf1")
     val jsonOut = args.lift(2)
-    val passes = sys.env.get("SPARK_GRAFT_SOAK_PASSES")
-      .map(_.toInt).getOrElse(3)
     // disk-checkpoint mode: the cleaner property must be in the
     // SparkConf BEFORE the context starts (checkpoint files of GC'd
     // RDDs are then deleted — a 100× run writes tens of GB of state
@@ -339,28 +275,26 @@ object SoakFold {
     require(java.nio.file.Files.exists(
         java.nio.file.Paths.get(soaked, "documents.parquet")),
       s"soaked fixture $soaked missing — generate it with graft.Soak first")
-    // warm codegen/JIT on the small scale before any timed pass
-    Seq("graph_pagerank", "graph_pagerank_delta").foreach { n =>
-      SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")
-        .write.format("noop").mode("overwrite").save()
-    }
-    val loadStart = load1()
+    Bench.warm(spark, Seq("graph_pagerank", "graph_pagerank_delta"), "soakfold")
+    val loop = new RepLoop(spark, "soakfold")
+    val loadStart = Bench.load1()
     println("| fixture | shape | fold s | scratch s | fold/scratch |")
     println("|---|---|---|---|---|")
     val results = Seq("base" -> base, "soaked" -> soaked).map {
       case (tag, dir) =>
-        val rows = measure(spark, dir, passes)
-        rows.foreach { case (shape, f, s, n) =>
-          println(f"| $tag | $shape (delta $n) | ${f.min}%.2f | ${s.min}%.2f | ${f.min / s.min}%.2f |")
+        val rows = measure(spark, tag, dir, loop)
+        rows.foreach { r =>
+          println(f"| $tag | ${r.shape} (delta ${r.nDelta}) | ${r.fold.min}%.2f | ${r.scratch.min}%.2f | ${r.fold.min / r.scratch.min}%.2f |")
         }
         tag -> rows
     }
-    val loadEnd = load1()
+    val loadEnd = Bench.load1()
     jsonOut.foreach { path =>
-      def arr(v: Seq[Double]) = v.map(t => f"$t%.3f").mkString("[", ", ", "]")
+      def arr(v: Reps) = v.times.map(t => f"$t%.3f").mkString("[", ", ", "]")
       val rows = results.flatMap { case (tag, rs) =>
-        rs.map { case (shape, f, s, n) =>
-          f"""    "${tag}_$shape": {"n_delta": $n, "fold_s": ${f.min}%.3f, "scratch_s": ${s.min}%.3f, "fold_over_scratch": ${f.min / s.min}%.3f, "fold_reps": ${arr(f)}, "scratch_reps": ${arr(s)}}"""
+        rs.map { r =>
+          val (f, s) = (r.fold.min, r.scratch.min)
+          f"""    "${tag}_${r.shape}": {"n_delta": ${r.nDelta}, "fold_s": $f%.3f, "scratch_s": $s%.3f, "fold_over_scratch": ${f / s}%.3f, "fold_reps": ${arr(r.fold)}, "scratch_reps": ${arr(r.scratch)}, "layers": ${r.layers}}"""
         }
       }.mkString(",\n")
       val onlyJson = only.map(_.mkString("\"", ",", "\"")).getOrElse("null")
@@ -368,12 +302,12 @@ object SoakFold {
         s"""{
            |  "base": "$base",
            |  "soaked": "$soaked",
-           |  "passes": $passes,
+           |  "passes": ${Bench.Passes},
            |  "only": $onlyJson,
            |  "trajectory": "amortized (built once per shape, localCheckpointed, outside all timed reps)",
            |  "fold_includes": "delta checks + capped ball BFS + touched-sized degree maintenance + ball-restricted rounds over maintained (traj, edgesDeg) state",
            |  "loadavg": {"start": $loadStart, "end": $loadEnd},
-           |  "load_gate": {"max_load": $maxLoad, "per_rep": true, "gate_waited_s": $gateWaitedS, "reps_started_gated": $gatedReps},
+           |  "load_gate": ${loop.gateJson},
            |  "disk_ckpt": $diskCkpt,
            |  "rows": {
            |$rows

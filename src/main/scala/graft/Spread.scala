@@ -18,8 +18,7 @@ import org.apache.spark.sql.DataFrame
   * the sf0.1 corpus fans to ~10 tasks, the neighborhood the 8-core
   * bench measured as overhead-optimal; these operators do hashing /
   * shingling / vector math, so compute per compressed byte is high
-  * and the target is deliberately far below a scan-split size; env
-  * `GRAFT_SPREAD_TARGET_BYTES` overrides). The count is CAPPED at
+  * and the target is deliberately far below a scan-split size). The count is CAPPED at
   * `defaultParallelism`, so at cluster volume the behavior is
   * byte-identical to the old idiom (want saturates at the cap); the
   * change only removes the fixed fan-out where there is no volume to
@@ -39,12 +38,8 @@ private[graft] object Spread {
     * heavies ~15-30% at 32 cores; 8 KB keeps their full fan-out at
     * bench volume while still collapsing the 32-way fan-out of the
     * oracle-scale inputs). */
-  val DefaultTarget: Long =
-    sys.env.get("GRAFT_SPREAD_TARGET_BYTES").map(_.toLong)
-      .getOrElse(64L << 10)
-  val DenseTarget: Long =
-    sys.env.get("GRAFT_SPREAD_DENSE_TARGET_BYTES").map(_.toLong)
-      .getOrElse(8L << 10)
+  val DefaultTarget: Long = 64L << 10
+  val DenseTarget: Long = 8L << 10
 
   def byVolume(df: DataFrame,
                targetBytes: Long = DefaultTarget): DataFrame = {

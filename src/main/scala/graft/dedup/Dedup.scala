@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Checkpoints.materialize
 import graft.functions.Portable._
 
 /** Deduplication operators for a training-data pipeline.
@@ -232,18 +233,6 @@ object Dedup {
     *
     * `pairs` must have columns (id1, id2); returns (doc_id,
     * cluster_id) for every doc appearing in any pair. */
-  /** Materialize an iteration artifact, truncating lineage.
-    * `localCheckpoint` blocks live only on executors — fine on
-    * local[*], but on a real cluster an executor loss makes them
-    * unrecoverable and fails the whole iterative job. When the
-    * session has a reliable checkpoint dir configured
-    * (`sc.setCheckpointDir`, typically HDFS/S3 at 100TB scale), use
-    * fault-tolerant `checkpoint()` instead. */
-  private def materialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(eager = true)
-    else df.localCheckpoint(eager = true)
-
   def nearDupClusters(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
     // materialize the edge list ONCE — every iteration joins it, and
     // without this the (possibly expensive) pair-producing pipeline

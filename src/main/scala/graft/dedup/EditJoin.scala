@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Checkpoints.materialize
+
 /** Edit-distance similarity self-join — character-level, metric-
   * guaranteed: all pairs with levenshtein(s, t) ≤ k, found without
   * the O(n²) verify the scalar function alone would need.
@@ -30,11 +32,6 @@ import org.apache.spark.sql.functions._
   *
   * Returns (id1, id2, dist) with id1 < id2, dist ≤ k. */
 object EditJoin {
-
-  private def materialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(eager = true)
-    else df.localCheckpoint(eager = true)
 
   def editJoin(df: DataFrame, id: Column, str: Column,
                k: Int, q: Int = 3): DataFrame = {

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Checkpoints.{lazyMat, materialize}
+
 /** Iterative graph analytics over edge-list DataFrames — the second
   * graph family next to Dedup.nearDupClusters (label propagation).
   * PageRank here scores nodes of the near-dup similarity graph:
@@ -22,35 +24,10 @@ import org.apache.spark.sql.functions._
   * pair-producing pipeline doesn't re-execute per round, and each
   * round's rank vector is materialized to truncate lineage (reliable
   * checkpoint when a checkpoint dir is set, localCheckpoint
-  * otherwise — same policy as Dedup). The node count enters as a
+  * otherwise — `graft.Checkpoints`). The node count enters as a
   * 1-row broadcast aggregate (crossJoin idiom), never a driver
   * collect. */
 object GraphOps {
-
-  /** See Dedup.materialize — same tradeoff, same policy. */
-  private def materialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(eager = true)
-    else df.localCheckpoint(eager = true)
-
-  /** Lineage-truncating checkpoint whose blocks materialize inside
-    * the FIRST consumer's job instead of a standalone eager action —
-    * the [[bfsRoundsAgg]] idiom generalized (round 17, guide §1/§2).
-    * Same storage, same truncation, same once-computed blocks for
-    * every later reader (concurrent readers of an unmaterialized
-    * block serialize on the block lock, so work is never doubled);
-    * what it removes is one full AQE action — result-stage + driver
-    * round-trip — per checkpoint, which a per-phase job profile
-    * measured as the iterative families' floor at bench scale: the
-    * per-round compute is tiny next to the fixed per-action overhead,
-    * and a 5-iterate trajectory paid 6 such actions where one final
-    * action materializes the same blocks.
-    * Use [[materialize]] only where a driver probe (count/head)
-    * follows immediately anyway, or where eagerness is the point. */
-  private def lazyMat(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(eager = false)
-    else df.localCheckpoint(eager = false)
 
   /** Fixed-iteration PageRank over an UNDIRECTED edge list `pairs`
     * (columns id1, id2; symmetrized and deduplicated internally).
@@ -991,11 +968,8 @@ object GraphOps {
     * shape, but a pathological delta (half the graph re-sent) would
     * OOM the driver before the locality pricing ever ran. Past this
     * many symmetrized delta rows the folds keep the SAME joins
-    * without the hints (Spark shuffles them — slower, never fatal).
-    * Env-overridable for clusters with bigger drivers. */
-  private val MaxBroadcastDeltaRows: Long =
-    sys.env.get("GRAFT_MAX_BROADCAST_DELTA_ROWS").map(_.toLong)
-      .getOrElse(4000000L)
+    * without the hints (Spark shuffles them — slower, never fatal). */
+  private val MaxBroadcastDeltaRows: Long = 4000000L
 
   private def hintIf(small: Boolean)(df: DataFrame): DataFrame =
     if (small) broadcast(df) else df

@@ -96,8 +96,7 @@ object ShardService {
           val key = Option(ex.getRequestHeaders.getFirst("X-Idempotency-Key"))
           val recs = body.linesIterator.filter(_.nonEmpty).map {
             case PostLine(pk, b64) =>
-              (new String(java.util.Base64.getDecoder.decode(b64), "UTF-8"),
-                jsonUnescape(pk))
+              (java.util.Base64.getDecoder.decode(b64), jsonUnescape(pk))
             case other =>
               throw new IllegalArgumentException(s"malformed record: $other")
           }.toSeq
@@ -111,7 +110,7 @@ object ShardService {
             else {
               // single server-side producer: sequence numbers are
               // assigned HERE, atomically per shard
-              val c = producer.putRecords(recs)
+              val c = producer.putBytes(recs)
               key.foreach(seenKeys += _)
               Some(c)
             }

@@ -26,7 +26,7 @@ import scala.jdk.CollectionConverters._
   *    which is the mechanism Kinesis uses to give per-key ordering.
   *  - **PutRecords flush limit**: a single call carries at most 500
   *    records (the API cap the reference's 1 s flush loop relies on
-  *    staying under); [[ShardedProducer.putRecords]] enforces it by
+  *    staying under); [[ShardedProducer.putBytes]] enforces it by
   *    splitting, like the AWS SDK caller must.
   *  - **Per-shard sequence numbers**: strictly increasing longs
   *    assigned at write, never reused across flushes, producers or
@@ -231,21 +231,23 @@ object SimulatedKinesis {
     private val nextSeq = existing.map(_.map(cachedCount).sum)
     private val nextFile = existing.map(_.lastOption.fold(0L)(fileIndex(_) + 1))
 
-    /** One PutRecords call: (data, partitionKey) pairs. Splits into
-      * ≤500-record chunks (the API rejects larger calls); each chunk
-      * writes one batch file per shard touched. Returns the number of
-      * API calls made. */
-    def putRecords(records: Seq[(String, String)]): Int = {
+    /** One PutRecords call: (data, partitionKey) pairs, data stored
+      * as raw bytes. Splits into ≤500-record chunks (the API rejects
+      * larger calls); each chunk writes one batch file per shard
+      * touched. Returns the number of API calls made. */
+    def putBytes(records: Seq[(Array[Byte], String)]): Int = {
       val calls = records.grouped(MaxRecordsPerPut).toSeq
       calls.foreach { call =>
         call.groupBy { case (_, pk) => shardFor(pk, nShards) }
           .toSeq.sortBy(_._1)
-          .foreach { case (shard, recs) =>
-            append(shard, recs.map { case (data, pk) => (data.getBytes(UTF_8), pk) })
-          }
+          .foreach { case (shard, recs) => append(shard, recs) }
       }
       calls.size
     }
+
+    /** [[putBytes]] with each record's data encoded as UTF-8. */
+    def putRecords(records: Seq[(String, String)]): Int =
+      putBytes(records.map { case (data, pk) => (data.getBytes(UTF_8), pk) })
 
     /** Whether `shard` held a sink epoch's file when this producer
       * opened — the sink's guard against re-appending a retried epoch. */

@@ -6,9 +6,7 @@ import org.apache.spark.sql.functions._
 /** The bench's per-layer fields are outputs like any other: checked on
   * fixtures whose shape fixes what each layer must show. */
 class BenchLayersSpec extends SparkSpec {
-
-  private def noop(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
+  import Bench.noop
 
   private def grouped: DataFrame = spark.range(0, 20000, 1, 4)
     .groupBy((col("id") % 97).as("k")).agg(sum(col("id")).as("s"))
@@ -51,5 +49,37 @@ class BenchLayersSpec extends SparkSpec {
         "a finished key never grows")
       assert(profile.layers("never ran") == Seq(Layers()))
     } finally profile.close()
+  }
+
+  test("the load gate returns at once: ungated under an unreachable max") {
+    val t0 = System.nanoTime()
+    assert(Bench.loadGate("spec", maxLoad = Double.MaxValue, maxWaitS = 600) == ((0, false)))
+    assert((System.nanoTime() - t0) / 1e9 < 1.0)
+  }
+
+  test("the load gate returns at once: gated when the max is -1 and the wait is 0") {
+    val t0 = System.nanoTime()
+    assert(Bench.loadGate("spec", maxLoad = -1.0, maxWaitS = 0) == ((0, true)))
+    assert((System.nanoTime() - t0) / 1e9 < 1.0)
+  }
+
+  test("the interleaved rep loop alternates sides and its rep keys read back layers") {
+    val loop = new RepLoop(spark, "spec", maxLoad = Double.MaxValue, maxWaitS = 0)
+    try {
+      val order = scala.collection.mutable.ArrayBuffer.empty[String]
+      val Seq(a, b) = loop.interleaved("row", passes = 3)(
+        "a" -> (() => { order += "a"; noop(narrow) }),
+        "b" -> (() => { order += "b"; noop(grouped) }))
+      assert(order == Seq("a", "b", "a", "b", "a", "b"))
+      assert(a.times.size == 3 && b.times.size == 3 && (a.times ++ b.times).forall(_ > 0))
+      assert(a.keys == Seq("row/a#1", "row/a#2", "row/a#3"))
+      assert(b.keys == Seq("row/b#1", "row/b#2", "row/b#3"))
+      val layers = loop.profile.layers(a.keys ++ b.keys: _*)
+      assert(layers.forall(_.jobs >= 1), layers)
+      assert(layers.drop(3).forall(_.shuffleWriteBytes > 0), layers)
+      val json = loop.layersJson(Seq("a" -> a, "b" -> b))
+      assert(json.startsWith("{\"a\": {\"plan_ms\":") && json.contains("\"b\": {"), json)
+      assert(loop.gateJson.contains("\"gate_waited_s\": 0, \"reps_started_gated\": 0"))
+    } finally loop.profile.close()
   }
 }

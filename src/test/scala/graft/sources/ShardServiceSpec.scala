@@ -339,6 +339,28 @@ class ShardServiceSpec extends SparkSpec {
     } finally server.stop(0)
   }
 
+  test("a binary payload posted over the wire is stored as its raw bytes") {
+    val dir = Files.createTempDirectory("graft_shard_http_bin").toString
+    val server = ShardService.start(dir, nShards = 1)
+    val ep = s"http://127.0.0.1:${server.getAddress.getPort}"
+    try {
+      // the byte 0xFF, which is not valid UTF-8 on its own
+      val conn = new java.net.URI(s"$ep/records").toURL
+        .openConnection().asInstanceOf[java.net.HttpURLConnection]
+      conn.setRequestMethod("POST"); conn.setDoOutput(true)
+      val os = conn.getOutputStream
+      try os.write("{\"partitionKey\":\"k\",\"data\":\"/w==\"}\n".getBytes("UTF-8"))
+      finally os.close()
+      assert(conn.getResponseCode == 200)
+      val line = ShardService.Client.get(s"$ep/records/0").trim
+      assert(line.contains("\"data\":\"/w==\""), s"stored line: $line")
+      val viaSpark = spark.read.format("kinesis-sim")
+        .option("path", dir).option("shards", "1").load()
+        .collect().map(_.getAs[Array[Byte]]("data").toSeq)
+      assert(viaSpark.toSeq == Seq(Seq(0xFF.toByte)), s"batch read: ${viaSpark.toSeq}")
+    } finally server.stop(0)
+  }
+
   test("concurrent retries under one idempotency key write exactly once") {
     val dir = Files.createTempDirectory("graft_shard_http_race").toString
     val server = ShardService.start(dir, nShards = 1)
